@@ -115,22 +115,18 @@ class TableVersion:
 
     @property
     def exists(self) -> bool:
-        """True iff the snapshot is still retained (manifest entry + data).
-        A vacuumed version is gone even if its batch directory survives
-        inside newer versions' lineage."""
-        import os
-
-        store = self._table._store
-        return str(self.version) in store._manifest.versions and os.path.isdir(
-            self.storage_path
-        )
+        """True iff the snapshot is still retained: a manifest entry whose
+        whole lineage is on disk (restored and cloned versions own no
+        directory of their own)."""
+        return self._table._store._lineage_on_disk(self.version)
 
     @property
     def schema(self):
-        """Schema of this snapshot (node.py:101-105); None once vacuumed."""
+        """Schema of this snapshot (node.py:101-105), as recorded in the
+        manifest; None once vacuumed."""
         if not self.exists:
             return None
-        return self._table._store.read_version(self.version).schema
+        return self._table._store.version_schema(self.version)
 
     @property
     def record_count(self) -> int | None:

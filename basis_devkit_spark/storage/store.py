@@ -27,6 +27,18 @@ again. A crash mid-append leaves an orphan directory the manifest never
 references (invisible to readers; reclaimed by vacuum). ``compact()``
 rewrites a long lineage into one directory.
 
+Each version's schema lives in the manifest (``schema_json``, recorded at
+commit). ``version_schema`` puts it in read form — partition columns
+last, every field nullable — and that is exactly the schema a read of
+the version returns. Reads open every lineage
+directory with it through one reader (``_read_lineage``) and never infer
+a schema from parquet footers — no footer-inference Spark job per
+directory, partition values keep their written types, and a directory an
+empty partitioned write left without files still reads. Only a version
+committed without a record (the public ``create_new_version`` → write
+files → ``set_active_version`` path, or a manifest that predates schema
+records) falls back to inference, in ``_infer_schema``.
+
 At 100 TB the data write is the expensive distributed part; the manifest is
 O(1) driver-side metadata, so this protocol has no scale bottleneck. Row
 counts are captured with ``df.observe`` during the write job itself —
@@ -120,6 +132,10 @@ class _Manifest:
     name: str
     active_version: int | None = None
     next_version: int = 1
+    # One entry per retained version: created_at, record_count, the
+    # lineage ``dirs``, and ``schema_json`` — the version's schema,
+    # recorded at commit. Readers take the schema from here and never
+    # infer it from the data files.
     versions: dict[str, dict[str, Any]] = field(default_factory=dict)
     unique_on: list[str] | None = None
     schema_hints: dict[str, str] | None = None
@@ -293,11 +309,17 @@ class TableStore:
 
     def has_active_version(self) -> bool:
         v = self._manifest.active_version
-        if v is None:
+        return v is not None and self._lineage_on_disk(v)
+
+    def _lineage_on_disk(self, version: int) -> bool:
+        """True iff ``version`` is retained in the manifest and every
+        directory of its lineage exists. Checks the lineage, not the
+        ``v=N`` directory: a restored or cloned version owns none, and a
+        vacuumed version is gone even if its batch directory survives
+        inside newer versions' lineage."""
+        if str(version) not in self._manifest.versions:
             return False
-        dirs = self._version_dirs(v)
-        # a restored version owns no v=N dir of its own — validate its
-        # referenced lineage instead
+        dirs = self._version_dirs(version)
         return bool(dirs) and all(
             os.path.isdir(os.path.join(self.path, d)) for d in dirs
         )
@@ -356,11 +378,7 @@ class TableStore:
                         "expectation_violations"
                     ),
                     "active": v == active,
-                    "on_disk": os.path.isdir(self.version_path(v))
-                    or all(
-                        os.path.isdir(os.path.join(self.path, d))
-                        for d in meta.get("dirs", [])
-                    ),
+                    "on_disk": self._lineage_on_disk(v),
                 }
             )
         return out
@@ -431,7 +449,7 @@ class TableStore:
     def schema(self) -> T.StructType | None:
         if not self.has_active_version():
             return None
-        return self.read().schema
+        return self.version_schema(self._manifest.active_version)
 
     # ---------------- init config (node.py:269-297) ----------------
     def configure(
@@ -544,13 +562,66 @@ class TableStore:
     def _set_version_dirs(self, version: int, dirs: list[str]) -> None:
         self._manifest.versions.setdefault(str(version), {})["dirs"] = list(dirs)
 
-    def _read_dirs(self, dirs: list[str]) -> DataFrame:
-        out: DataFrame | None = None
+    def version_schema(self, version: int) -> T.StructType:
+        """The schema ``read_version(version)`` returns: the version's
+        manifest record in read form (partition columns last, every field
+        nullable). A version committed without a record is inferred once;
+        the result is kept on its entry and persisted by the next commit."""
+        entry = self._manifest.versions.get(str(version), {})
+        if not entry.get("schema_json"):
+            entry["schema_json"] = self._infer_schema(
+                self._version_dirs(version)
+            ).json()
+        return _read_schema(
+            T.StructType.fromJson(json.loads(entry["schema_json"])),
+            self._manifest.partition_by,
+        )
+
+    def _infer_schema(self, dirs: list[str]) -> T.StructType:
+        """Footer inference over a lineage — the only place a schema is
+        discovered from this store's data files (one Spark job per
+        directory). Columns merge by name in lineage order; directories
+        without parquet files are skipped."""
+        fields: dict[str, T.StructField] = {}
         for d in dirs:
-            part = self.spark.read.parquet(os.path.join(self.path, d))
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        assert out is not None
-        return out
+            if self._list_parquet(d):
+                df = self.spark.read.parquet(os.path.join(self.path, d))
+                for f in df.schema.fields:
+                    fields.setdefault(f.name, f)
+        return T.StructType(list(fields.values()))
+
+    def _read_lineage(
+        self, version: int, kept: dict[str, list[str]] | None = None
+    ) -> DataFrame:
+        """The one lineage reader behind ``read``, ``read_version`` and
+        ``read_pruned``: every directory of ``version`` (or only its
+        ``kept`` files) opened with the version's recorded schema, so no
+        directory pays a footer-inference job and columns an older
+        directory lacks read as NULL. Directories stay separate reads:
+        one multi-root read would take ``v=N`` for a partition directory
+        and fail on partitioned stores. Each part is projected to the
+        schema's column order before the union: a directory written under
+        another ``partition_by`` returns its partition columns elsewhere."""
+        schema = self.version_schema(version)
+        parts = []
+        for d in self._version_dirs(version):
+            base = os.path.join(self.path, d)
+            paths = (
+                [base]
+                if kept is None
+                else [os.path.join(self.path, f) for f in kept.get(d, [])]
+            )
+            if paths:
+                parts.append(
+                    self.spark.read.schema(schema)
+                    .option("basePath", base)
+                    .parquet(*paths)
+                    .select(*schema.names)
+                )
+        if not parts:
+            # everything pruned: the steady-state "no new data" cursor tick
+            return local_relation(self.spark, [], schema)
+        return functools.reduce(DataFrame.union, parts)
 
     # ---------------- file statistics (data skipping) ----------------
     def _stats_targets(self) -> list[str]:
@@ -672,27 +743,7 @@ class TableStore:
         if not self.has_active_version():
             raise FileNotFoundError(f"table '{self.name}' has no active version")
         kept, _total = self.prune_files(filters)
-        out: DataFrame | None = None
-        for d in self._version_dirs(self._manifest.active_version):
-            files = kept.get(d, [])
-            if not files:
-                continue
-            part = (
-                self.spark.read.option("basePath", os.path.join(self.path, d))
-                .parquet(*[os.path.join(self.path, f) for f in files])
-            )
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        if out is None:
-            # Everything pruned — the common steady-state "no new data"
-            # cursor tick. Use the manifest's recorded schema; never pay an
-            # O(lineage) listing just to build an empty DataFrame.
-            sj = self._manifest.versions.get(
-                str(self._manifest.active_version), {}
-            ).get("schema_json")
-            schema = (
-                T.StructType.fromJson(json.loads(sj)) if sj else self.read().schema
-            )
-            out = local_relation(self.spark, [], schema)
+        out = self._read_lineage(self._manifest.active_version, kept)
         for col, op, val in filters:
             out = out.filter(_filter_expr(col, op, val))
         return out
@@ -722,7 +773,7 @@ class TableStore:
                 "run compact() first"
             )
         loc = os.path.join(self.path, dirs[0])
-        schema = self.read().schema
+        schema = self.version_schema(m.active_version)
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
@@ -745,7 +796,7 @@ class TableStore:
     def read(self) -> DataFrame:
         if not self.has_active_version():
             raise FileNotFoundError(f"table '{self.name}' has no active version")
-        df = self._read_dirs(self._version_dirs(self._manifest.active_version))
+        df = self._read_lineage(self._manifest.active_version)
         # expose the manifest's persisted row count on the frame: size-
         # aware consumers (e.g. the BPE vocab join auto-sizer) can pick
         # a join strategy without an extra count job over the artifact.
@@ -770,18 +821,11 @@ class TableStore:
         a version whose manifest entry is gone must never silently return a
         partial lineage (its own batch dir may survive as part of newer
         versions' lineage)."""
-        if str(version) not in self._manifest.versions:
+        if not self._lineage_on_disk(version):
             raise FileNotFoundError(
                 f"table '{self.name}' has no version {version} (vacuumed?)"
             )
-        dirs = self._version_dirs(version)
-        # validate the version's LINEAGE dirs (a restored version owns no
-        # v=N directory of its own — it references older lineage)
-        if not dirs or not all(
-            os.path.isdir(os.path.join(self.path, d)) for d in dirs
-        ):
-            raise FileNotFoundError(f"table '{self.name}' has no version {version}")
-        return self._read_dirs(dirs)
+        return self._read_lineage(version)
 
     def restore(self, version: int) -> int:
         """Delta-style RESTORE TABLE: make an old version's contents the
@@ -794,11 +838,14 @@ class TableStore:
                 f"table '{self.name}' has no version {version} (vacuumed?)"
             )
         dirs = list(self._version_dirs(version))
-        rc = self._manifest.versions[str(version)].get("record_count")
+        info = self._manifest.versions[str(version)]
         v = self.create_new_version()
         self._set_version_dirs(v, dirs)
-        self._manifest.versions[str(v)]["restored_from"] = version
-        self.set_active_version(v, record_count=rc)
+        entry = self._manifest.versions[str(v)]
+        entry["restored_from"] = version
+        if info.get("schema_json"):
+            entry["schema_json"] = info["schema_json"]
+        self.set_active_version(v, record_count=info.get("record_count"))
         return v
 
     def clone_shallow(
@@ -1087,10 +1134,9 @@ class TableStore:
         )
 
     def _record_schema(self, v: int, df: DataFrame) -> None:
-        """Persist the version's full output schema (incl. partition and
-        decoration columns) in the manifest, so metadata-only paths — e.g.
-        an everything-pruned ``read_pruned`` — never have to construct a
-        DataFrame over the whole lineage just to learn the schema."""
+        """Record the version's schema (incl. partition and decoration
+        columns) in the manifest; every read of the version opens its
+        lineage with it (in read form, see ``version_schema``)."""
         self._manifest.versions.setdefault(str(v), {})["schema_json"] = df.schema.json()
 
     def _check_strict_schema(self, df: DataFrame, target: T.StructType) -> None:
@@ -1139,9 +1185,9 @@ class TableStore:
                 self.set_active_version(v, record_count=n)
                 return
             prev = self._manifest.active_version
-            existing = self.read()
-            self._check_strict_schema(df, existing.schema)
-            df = _align_columns(df, existing.schema)
+            existing = self.version_schema(prev)
+            self._check_strict_schema(df, existing)
+            df = _align_columns(df, existing)
             prev_dirs = self._version_dirs(prev)
             prev_count = self._manifest.versions.get(str(prev), {}).get("record_count")
             v = self.create_new_version()
@@ -1481,7 +1527,7 @@ class TableStore:
         """Delete all rows, keep schema (A7)."""
         if not self.has_active_version():
             return
-        schema = self.read().schema
+        schema = self.version_schema(self._manifest.active_version)
         empty = local_relation(self.spark, [], schema)
         v, _ = self._commit_single_dir_version(empty)
         self.set_active_version(v, record_count=0)
@@ -1746,6 +1792,32 @@ def _filter_expr(col: str, op: str, val: Any):
     if op == "<=":
         return c <= F.lit(val)
     raise ValueError(f"unsupported pruning op: {op!r}")
+
+
+def _read_schema(
+    schema: T.StructType, partition_by: list[str] | None
+) -> T.StructType:
+    """``schema`` in read form: partition columns last (in ``partition_by``
+    order) and every field nullable, nested ones included."""
+    pcols = [c for c in partition_by or [] if c in schema.names]
+    fields = [f for f in schema.fields if f.name not in pcols]
+    fields += [schema[c] for c in pcols]
+    return _nullable(T.StructType(fields))
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def _align_columns(df: DataFrame, target: T.StructType) -> DataFrame:

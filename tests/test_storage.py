@@ -1404,3 +1404,221 @@ def test_apply_agg_delta_equals_recompute(spark, tmp_path):
         for r in agg_of(base.read()).collect()
     }
     assert got2 == want2 == {None: (2, 7.0)}
+
+
+def _jobs_launched(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, #Spark jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fields(schema):
+    """(name, type, nullable) per field; ``read()`` also decorates each
+    field's metadata with the row count."""
+    return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+
+def test_restore_carries_schema_record(spark, tmp_path):
+    """The restored version's manifest entry records the source version's
+    schema, so an everything-pruned read of it needs no Spark job."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(stats_columns="k")
+    st.write_replace(_df(spark, [(1, "a"), (2, "b")]))
+    v1 = st.get_active_version()
+    st.write_replace(spark.range(5).toDF("x"))
+    v3 = st.restore(v1)
+    entries = st._manifest.versions
+    assert entries[str(v3)]["schema_json"] == entries[str(v1)]["schema_json"]
+    assert TableStore(str(tmp_path), "t", spark).schema == st.version_schema(v1)
+    out, jobs = _jobs_launched(
+        spark, "jobcount-restore", lambda: st.read_pruned([("k", ">", 100)])
+    )
+    assert jobs == 0
+    assert out.columns == ["k", "v"] and out.count() == 0
+
+
+def test_table_version_exists_after_restore_and_clone(spark, tmp_path):
+    """A restored or cloned version owns no ``v=N`` directory; the live
+    ``TableVersion`` must still see it through its lineage."""
+    from basis_devkit_spark.node.table import Table
+
+    src = TableStore(str(tmp_path), "src", spark)
+    src.write_replace(_df(spark, [(1, "a"), (2, "b")]))
+    v1 = src.get_active_version()
+    src.write_replace(_df(spark, [(3, "c")]))
+    src.restore(v1)
+    clone = TableStore(str(tmp_path), "clone", spark)
+    src.clone_shallow(clone)
+    for store in (src, clone):
+        t = Table(store.name)
+        t.bind(store, spark)
+        tv = t.get_active_version()
+        assert store.exists and tv.exists
+        assert [f.name for f in tv.schema.fields] == ["k", "v"]
+        assert tv.record_count == 2
+
+
+def test_partition_values_keep_their_written_type(spark, tmp_path):
+    """String partition values that look like numbers or dates read back
+    as the strings that were written, through every read path, and a
+    later non-numeric value appends cleanly."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(partition_by=["code", "day"], stats_columns="k")
+    schema = "k int, code string, day string"
+    st.write_replace(
+        spark.createDataFrame(
+            [(1, "007", "2024-01-01"), (2, "010", "2024-01-02")], schema
+        ).withColumn("tags", F.array(F.lit("t")))  # non-null, nested non-null
+    )
+    v1 = st.get_active_version()
+    for df in (st.read(), st.read_version(v1), st.read_pruned([("k", ">=", 1)])):
+        assert df.dtypes == [
+            ("k", "int"), ("tags", "array<string>"),
+            ("code", "string"), ("day", "string"),
+        ]
+        assert sorted((r.code, r.day) for r in df.collect()) == [
+            ("007", "2024-01-01"),
+            ("010", "2024-01-02"),
+        ]
+    # the recorded schema is exactly what a read returns: partition
+    # columns last, every field nullable
+    assert st.read_version(v1).schema == st.version_schema(v1) == st.schema
+    st.append(spark.createDataFrame([(3, "abc", "today")], schema))
+    assert sorted(r.code for r in st.read().collect()) == ["007", "010", "abc"]
+
+
+def test_empty_append_to_partitioned_store_stays_readable(spark, tmp_path):
+    """An empty batch appended to a partitioned store leaves a directory
+    with no parquet files in the lineage; reads must still work."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(partition_by="p")
+    st.write_replace(spark.createDataFrame([(1, "x"), (2, "y")], "k int, p string"))
+    st.append(spark.createDataFrame([], "k int, p string"))
+    assert st.get_active_version() == 2
+    assert st.record_count == 2
+    assert sorted(r.k for r in st.read().collect()) == [1, 2]
+    assert st.read_version(2).count() == 2
+    st.append(spark.createDataFrame([(3, "x")], "k int, p string"))
+    assert sorted(r.k for r in st.read().collect()) == [1, 2, 3]
+
+
+def test_reads_after_partition_by_change_keep_column_values(spark, tmp_path):
+    """Lineage directories written under different ``partition_by``
+    return their columns in different orders; every read lines them up
+    by name, so old rows keep their own values."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(partition_by="a", stats_columns="k")
+    schema = "k int, a string, b string, c int"
+    st.write_replace(spark.createDataFrame([(1, "a1", "b1", 10)], schema))
+    st.configure(partition_by=["a", "b"])
+    st.append(spark.createDataFrame([(2, "a2", "b2", 20)], schema))
+    st.configure(partition_by=["c", "a"])
+    st.append(spark.createDataFrame([(3, "a3", "b3", 30)], schema))
+    v = st.get_active_version()
+    want = [(1, "a1", "b1", 10), (2, "a2", "b2", 20), (3, "a3", "b3", 30)]
+    for df in (
+        st.read(),
+        st.read_version(v),
+        st.read_pruned([("k", ">=", 1)]),
+        TableStore(str(tmp_path), "t", spark).read(),
+    ):
+        assert _fields(df.schema) == _fields(st.version_schema(v))
+        assert sorted((r.k, r.a, r.b, r.c) for r in df.collect()) == want
+
+
+def test_lineage_reads_launch_no_jobs(spark, tmp_path):
+    """Building a read over a 5-directory lineage plans against the
+    manifest's recorded schema: no footer-inference job per directory
+    (modelled on ``test_write_is_single_job``)."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(partition_by="p", stats_columns="k")
+    st.write_replace(spark.createDataFrame([(0, "a")], "k int, p string"))
+    for i in range(1, 5):
+        st.append(spark.createDataFrame([(i, "ab"[i % 2])], "k int, p string"))
+    v = st.get_active_version()
+    assert len(st._version_dirs(v)) == 5
+    fresh = TableStore(str(tmp_path), "t", spark)  # nothing cached in memory
+    (full, old, pruned), jobs = _jobs_launched(
+        spark,
+        "jobcount-read",
+        lambda: (
+            fresh.read(),
+            fresh.read_version(v - 1),
+            fresh.read_pruned([("k", ">=", 3)]),
+        ),
+    )
+    assert jobs == 0
+    assert sorted(r.k for r in full.collect()) == [0, 1, 2, 3, 4]
+    assert sorted(r.k for r in old.collect()) == [0, 1, 2, 3]
+    assert sorted(r.k for r in pruned.collect()) == [3, 4]
+
+
+def test_version_without_schema_record_is_inferred(spark, tmp_path):
+    """A version committed without a schema record — the public
+    create_new_version -> write files -> set_active_version path, or a
+    manifest from before schema records — is inferred from the footers on
+    first read; the next commit persists it, so later reads plan with no
+    Spark job."""
+    import json as _json
+
+    from pyspark.sql import types as T
+
+    st = TableStore(str(tmp_path), "t", spark)
+    st.write_replace(_df(spark, [(1, "a")]))
+    st.append(spark.createDataFrame([(2, "b", 2.5)], "k int, v string, w double"))
+    with open(st._manifest_path()) as f:
+        m = _json.load(f)
+    for entry in m["versions"].values():
+        entry.pop("schema_json", None)
+    with open(st._manifest_path(), "w") as f:
+        _json.dump(m, f)
+    legacy = TableStore(str(tmp_path), "t", spark)
+    rows = sorted(map(tuple, legacy.read().collect()))
+    assert rows == [(1, "a", None), (2, "b", 2.5)]
+
+    # a record written as the raw frame schema (partition column first,
+    # non-nullable fields) is served in read form everywhere
+    raw = TableStore(str(tmp_path), "raw", spark)
+    raw.configure(partition_by="p", stats_columns="k")
+    raw.write_replace(
+        spark.createDataFrame([("x", 1)], "p string, k int").withColumn(
+            "n", F.lit(1)
+        )
+    )
+    with open(raw._manifest_path()) as f:
+        m = _json.load(f)
+    m["versions"][str(m["active_version"])]["schema_json"] = T.StructType(
+        [
+            T.StructField("p", T.StringType(), False),
+            T.StructField("k", T.IntegerType(), False),
+            T.StructField("n", T.IntegerType(), False),
+        ]
+    ).json()
+    with open(raw._manifest_path(), "w") as f:
+        _json.dump(m, f)
+    raw = TableStore(str(tmp_path), "raw", spark)
+    read_schema = _fields(raw.read().schema)
+    assert [name for name, _, _ in read_schema] == ["k", "n", "p"]
+    assert all(nullable for _, _, nullable in read_schema)
+    assert _fields(raw.schema) == read_schema
+    assert _fields(raw.read_pruned([("k", ">", 100)]).schema) == read_schema
+    raw.append(spark.createDataFrame([(2, 2, "y")], "k int, n int, p string"))
+    assert sorted(map(tuple, raw.read().collect())) == [(1, 1, "x"), (2, 2, "y")]
+
+    v = legacy.create_new_version()
+    _df(spark, [(3, "c")]).write.parquet(legacy.version_path(v))
+    legacy.set_active_version(v)
+    assert "schema_json" not in legacy._manifest.versions[str(v)]
+    assert [(r.k, r.v) for r in legacy.read().collect()] == [(3, "c")]
+    legacy.append(_df(spark, [(4, "d")]))  # commits the inferred records
+    fresh = TableStore(str(tmp_path), "t", spark)
+    assert "schema_json" in fresh._manifest.versions[str(v)]
+    _, jobs = _jobs_launched(
+        spark, "jobcount-legacy", lambda: fresh.read_version(v)
+    )
+    assert jobs == 0
