@@ -124,7 +124,7 @@ def cmd_upload(args, spark) -> int:
 
 def cmd_run(args, spark) -> int:
     eng = _engine(args, _get_spark(spark))
-    log = eng.run_graph(parallelism=getattr(args, "parallelism", 1) or 1)
+    log = eng.run_graph(parallelism=getattr(args, "parallelism", None))
     _out({"run_log": log})
     return 0
 
@@ -712,8 +712,10 @@ def build_parser() -> argparse.ArgumentParser:
     run = sub.add_parser("run", help="run the full graph")
     run.add_argument("app", nargs="?")
     run.add_argument(
-        "-j", "--parallelism", type=int, default=1,
-        help="submit each topo level's independent nodes concurrently",
+        "-j", "--parallelism", type=int, default=None,
+        help="nodes run at once; each starts as soon as the nodes it "
+        "depends on commit (default: the session's parallelism; 1 runs "
+        "one node at a time)",
     )
 
     tr = sub.add_parser("trigger", help="run one node immediately")

@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import re
 import runpy
+import threading
 import time
 from collections import defaultdict, deque
 from datetime import datetime
@@ -38,6 +39,7 @@ from basis_devkit_spark.engine.context import ExecutionContext
 from basis_devkit_spark.engine.cron import cron_matches
 from basis_devkit_spark.graph.loader import load_graph
 from basis_devkit_spark.graph.spec import GraphSpec, NodeSpec
+from basis_devkit_spark.session import sql_over_views
 from basis_devkit_spark.storage.state import StateStore
 from basis_devkit_spark.storage.store import TableStore
 
@@ -76,6 +78,7 @@ class Engine:
         self.execution_limit_s = execution_limit_s
         self.graph: GraphSpec | None = None
         self._stores: dict[str, TableStore] = {}
+        self._stores_lock = threading.Lock()
         self._components: dict[str, Callable[..., None]] = {}
         self._run_log: list[dict[str, Any]] = []
         # HTTP request/response bridge: responses posted by node code via
@@ -129,36 +132,42 @@ class Engine:
 
     # ---------------- stores ----------------
     def store(self, name: str) -> TableStore:
-        if name not in self._stores:
-            st = TableStore(self.storage_root, name, self.spark)
-            spec = None
-            if self.graph is not None:
-                spec = next(
-                    (s for s in self.graph.stores if s.name == name), None
+        """The engine's one cached handle for store ``name``. Locked: two
+        concurrent nodes touching a store first must share one handle — a
+        second handle would commit against a stale ``commit_seq``."""
+        with self._stores_lock:
+            st = self._stores.get(name)
+            if st is None:
+                st = self._stores[name] = self._open_store(name)
+            return st
+
+    def _open_store(self, name: str) -> TableStore:
+        st = TableStore(self.storage_root, name, self.spark)
+        spec = None
+        if self.graph is not None:
+            spec = next((s for s in self.graph.stores if s.name == name), None)
+        if spec is not None:
+            cfg = {
+                k: getattr(spec, k)
+                for k in (
+                    "unique_on",
+                    "partition_by",
+                    "cluster_by",
+                    "zorder_by",
+                    "bucket_by",
+                    "num_buckets",
+                    "stats_columns",
+                    "expectations",
+                    "expectations_mode",
+                    "strictly_monotonic_ordering",
+                    "created_ordering",
+                    "strict_schema",
                 )
-            if spec is not None:
-                cfg = {
-                    k: getattr(spec, k)
-                    for k in (
-                        "unique_on",
-                        "partition_by",
-                        "cluster_by",
-                        "zorder_by",
-                        "bucket_by",
-                        "num_buckets",
-                        "stats_columns",
-                        "expectations",
-                        "expectations_mode",
-                        "strictly_monotonic_ordering",
-                        "created_ordering",
-                        "strict_schema",
-                    )
-                    if getattr(spec, k, None) is not None
-                }
-                if cfg:
-                    st.configure(**cfg)
-            self._stores[name] = st
-        return self._stores[name]
+                if getattr(spec, k, None) is not None
+            }
+            if cfg:
+                st.configure(**cfg)
+        return st
 
     def seed_store(self, name: str, df: DataFrame) -> None:
         """Register external data (e.g. a testdata parquet) as the active
@@ -176,11 +185,12 @@ class Engine:
         names = tables if tables is not None else sorted(
             set(self._stores) | self.graph_store_names()
         )
+        views = {}
         for name in names:
             st = self.store(name)
             if st.exists:
-                st.read().createOrReplaceTempView(name)
-        return self.spark.sql(sql)
+                views[name] = st.read()
+        return sql_over_views(self.spark, views, sql)
 
     def vacuum_all(self, keep_last: int = 2) -> None:
         """Retention GC over every materialized store (node.py:403-404)."""
@@ -238,23 +248,21 @@ class Engine:
     def _node_dir(self) -> str:
         return (self.graph.path if self.graph and self.graph.path else ".")
 
-    def _render_sql_node(self, node: NodeSpec) -> str:
+    def _render_sql_node(self, node: NodeSpec) -> tuple[str, dict[str, DataFrame]]:
         """Render a SQL node's template against the current stores and
-        parameters (inputs registered as temp views; secret:// refs
-        resolved) and return the final SQL text."""
+        parameters (secret:// refs resolved): the final SQL text and the
+        input frames to bind as temp views while it runs."""
         sql_path = os.path.join(self._node_dir(), node.node_file)
         with open(sql_path) as f:
             template = f.read()
-        # Register each connected input store as a temp view under both its
-        # port name and store name; {{ port }} renders to the view name.
+        # Each connected input store is viewed under both its port name and
+        # store name; {{ port }} renders to the view name.
         tpl_ctx: dict[str, Any] = {}
+        views: dict[str, DataFrame] = {}
         for port, store_name in node.inputs.items():
             st = self.store(store_name)
             if st.exists:
-                df = st.read()
-                df.createOrReplaceTempView(store_name)
-                if port != store_name:
-                    df.createOrReplaceTempView(port)
+                views[store_name] = views[port] = st.read()
             tpl_ctx[port] = store_name
             tpl_ctx[store_name] = store_name
         for name, value in (node.parameters or {}).items():
@@ -264,7 +272,7 @@ class Engine:
 
             tpl_ctx[name] = _SqlParam(maybe_resolve_ref(value))
         rendered = jinja2.Template(template).render(**tpl_ctx)
-        return rendered.strip().rstrip(";")
+        return rendered.strip().rstrip(";"), views
 
     def explain_node(self, key: str, mode: str = "formatted") -> dict[str, str]:
         """Rendered SQL + Spark physical plan for a SQL node — the
@@ -282,16 +290,16 @@ class Engine:
                 "note": "no static plan (not a SQL node)",
                 **extra,
             }
-        rendered = self._render_sql_node(node)
-        df = self.spark.sql(rendered)
+        rendered, views = self._render_sql_node(node)
+        df = sql_over_views(self.spark, views, rendered)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), mode
         )
         return {"node": node.id or key, "sql": rendered, "plan": plan, **extra}
 
     def _run_sql_node(self, ctx: ExecutionContext, node: NodeSpec) -> None:
-        rendered = self._render_sql_node(node)
-        result = self.spark.sql(rendered)
+        rendered, views = self._render_sql_node(node)
+        result = sql_over_views(self.spark, views, rendered)
         if len(node.outputs) > 1:
             raise ValueError(
                 f"SQL node '{node.display_name}' has {len(node.outputs)} outputs; "
@@ -373,8 +381,11 @@ class Engine:
                         next_dirty.add(store_name)
             dirty = next_dirty
 
-    def topo_order(self) -> list[NodeSpec]:
-        """Topological order of function nodes via store wiring."""
+    def _store_edges(
+        self,
+    ) -> tuple[dict[str, NodeSpec], dict[str, int], dict[str, list[NodeSpec]]]:
+        """Producer -> consumer edges over store wiring: (nodes by id,
+        in-degree per node id, consumers per producer id)."""
         assert self.graph is not None
         producers: dict[str, list[NodeSpec]] = defaultdict(list)
         for n in self.graph.functions:
@@ -384,7 +395,6 @@ class Engine:
                 producers[n.webhook].append(n)
         indeg: dict[str, int] = {}
         edges: dict[str, list[NodeSpec]] = defaultdict(list)
-        by_id = {n.id: n for n in self.graph.functions}
         for n in self.graph.functions:
             indeg.setdefault(n.id, 0)
             for s in n.inputs.values():
@@ -392,6 +402,11 @@ class Engine:
                     if p.id != n.id:
                         edges[p.id].append(n)
                         indeg[n.id] = indeg.get(n.id, 0) + 1
+        return {n.id: n for n in self.graph.functions}, indeg, edges
+
+    def topo_order(self) -> list[NodeSpec]:
+        """Topological order of function nodes via store wiring."""
+        by_id, indeg, edges = self._store_edges()
         q = deque(sorted((nid for nid, d in indeg.items() if d == 0)))
         out: list[NodeSpec] = []
         while q:
@@ -401,7 +416,7 @@ class Engine:
                 indeg[m.id] -= 1
                 if indeg[m.id] == 0:
                     q.append(m.id)
-        if len(out) != len(self.graph.functions):
+        if len(out) != len(by_id):
             # cycle: fall back to declaration order for the remainder
             done = {n.id for n in out}
             out.extend(n for n in self.graph.functions if n.id not in done)
@@ -410,24 +425,8 @@ class Engine:
     def topo_levels(self) -> list[list["NodeSpec"]]:
         """Topological LEVELS of function nodes: level k holds nodes whose
         producers all sit in levels < k, so everything within one level is
-        mutually independent — the unit of safe concurrent submission."""
-        assert self.graph is not None
-        producers: dict[str, list[NodeSpec]] = defaultdict(list)
-        for n in self.graph.functions:
-            for s in n.outputs.values():
-                producers[s].append(n)
-            if n.webhook:
-                producers[n.webhook].append(n)
-        indeg: dict[str, int] = {}
-        edges: dict[str, list[NodeSpec]] = defaultdict(list)
-        by_id = {n.id: n for n in self.graph.functions}
-        for n in self.graph.functions:
-            indeg.setdefault(n.id, 0)
-            for s in n.inputs.values():
-                for p in producers.get(s, []):
-                    if p.id != n.id:
-                        edges[p.id].append(n)
-                        indeg[n.id] = indeg.get(n.id, 0) + 1
+        mutually independent."""
+        by_id, indeg, edges = self._store_edges()
         frontier = sorted(nid for nid, d in indeg.items() if d == 0)
         levels: list[list[NodeSpec]] = []
         seen: set[str] = set()
@@ -441,7 +440,7 @@ class Engine:
                     if indeg[m.id] == 0:
                         nxt.add(m.id)
             frontier = sorted(nxt)
-        if len(seen) != len(self.graph.functions):
+        if len(seen) != len(by_id):
             # cycle: declaration order for the remainder, one per level
             for n in self.graph.functions:
                 if n.id not in seen:
@@ -449,22 +448,51 @@ class Engine:
         return levels
 
     def run_graph(
-        self, max_reruns: int = 10, parallelism: int = 1
+        self, max_reruns: int = 10, parallelism: int | None = None
     ) -> list[dict[str, Any]]:
-        """One full batch pass: every node once in topo order, honoring
-        request_new_run re-enqueues (bounded).
+        """One full batch pass: every node once, honoring request_new_run
+        re-enqueues (bounded, run after the pass in request order).
 
-        ``parallelism > 1`` submits each topological level's nodes
-        concurrently from a thread pool — on a real cluster the driver is
-        otherwise idle between job waves, and independent nodes' Spark
-        jobs schedule side-by-side (Spark's scheduler is thread-safe; FAIR
-        pools apply if configured). Within a level, nodes sharing an
-        OUTPUT store are serialized into successive waves (manifest
-        commits are per-store read-modify-write). SQL nodes are safe by
-        construction (temp views register under store names, which map
-        1:1 to content); Python nodes run user code — keep
-        ``parallelism=1`` if yours mutate shared state."""
+        Dataflow scheduling (Dryad-style): a node is submitted as soon as
+        every node before it in ``topo_order()`` that CONFLICTS with it
+        has finished — two nodes conflict when they share a store and at
+        least one of them writes it. That one rule orders producers before
+        consumers, serializes writers of the same store (manifest commits
+        are per-store read-modify-write) and keeps a cycle's read/write
+        order, so any graph whose nodes declare their I/O gets the result
+        of the sequential run. Up to ``parallelism`` nodes run at once on
+        driver threads (default: the session's ``defaultParallelism``;
+        ``1`` runs one node at a time); their Spark jobs share the
+        executors (Spark's scheduler is thread-safe; FAIR pools apply if
+        configured).
+
+        On the first node failure no further node is submitted; the nodes
+        already running finish (their commits stand) and the error is
+        re-raised.
+
+        Concurrency safety: SQL nodes and ``@node``/class-style Python
+        nodes that touch stores only through their declared ports are
+        safe. NOT ordered: writes to stores a node does not declare (e.g.
+        a ``Table`` whose port name matches a store by the port-name
+        fallback of ``ExecutionContext.register_table``, or a component
+        writing through the engine API), and Python state a node shares
+        outside the engine (module globals, files). Declare such I/O in
+        ``graph.yml`` or pass ``parallelism=1``."""
+        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
         assert self.graph is not None, "load_graph first"
+        sc = self.spark.sparkContext
+        if parallelism is None:
+            parallelism = sc.defaultParallelism
+        parallelism = max(1, parallelism)
+        caller_props = sc._jsc.sc().getLocalProperties()
+
+        def _run(node: NodeSpec) -> ExecutionContext:
+            # worker threads start without Spark local properties: carry
+            # the caller's (job group, scheduler pool) as a direct call would
+            sc._jsc.sc().setLocalProperties(caller_props.clone())
+            return self.run_node(node)
+
         reruns: dict[str, int] = defaultdict(int)
         rerun_queue: deque[NodeSpec] = deque()
 
@@ -491,47 +519,53 @@ class Engine:
                 return True
             return False
 
-        if parallelism <= 1:
-            queue = deque(self.topo_order())
-            while queue:
-                node = queue.popleft()
-                if node.kind == "webhook" or _skip_built_fit(node):
-                    continue
-                ctx = self.run_node(node)
-                _after(node, ctx)
-                if rerun_queue:
-                    queue.append(rerun_queue.popleft())
-            return self._run_log
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        for level in self.topo_levels():
-            runnable = [
-                n
-                for n in level
-                if n.kind != "webhook" and not _skip_built_fit(n)
-            ]
-            # Split into waves with disjoint output stores.
-            waves: list[list[NodeSpec]] = []
-            for n in runnable:
-                outs = set(n.outputs.values())
-                placed = False
-                for w in waves:
-                    taken = {s for m in w for s in m.outputs.values()}
-                    if not (outs & taken):
-                        w.append(n)
-                        placed = True
-                        break
-                if not placed:
-                    waves.append([n])
-            for w in waves:
-                if len(w) == 1:
-                    _after(w[0], self.run_node(w[0]))
-                    continue
-                with ThreadPoolExecutor(max_workers=parallelism) as ex:
-                    for node, ctx in zip(w, ex.map(self.run_node, w)):
-                        _after(node, ctx)
-        while rerun_queue:  # re-runs execute sequentially after the pass
+        order = [n for n in self.topo_order() if n.kind != "webhook"]
+        io = [(set(n.inputs.values()), set(n.outputs.values())) for n in order]
+        # each node with the earlier nodes it conflicts with
+        waiting = [
+            (
+                n,
+                {
+                    order[j].id
+                    for j in range(i)
+                    if writes & (io[j][0] | io[j][1]) or reads & io[j][1]
+                },
+            )
+            for i, (n, (reads, writes)) in enumerate(zip(order, io))
+        ]
+        finished: set[str] = set()
+        running: dict[Any, NodeSpec] = {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=parallelism) as pool:
+            while True:
+                # submit ready nodes in topo order while workers are free;
+                # a skipped fit node finishes at once and may unblock more
+                i = 0
+                while error is None and i < len(waiting) and len(running) < parallelism:
+                    node, deps = waiting[i]
+                    if not deps <= finished:
+                        i += 1
+                        continue
+                    del waiting[i]
+                    if _skip_built_fit(node):
+                        finished.add(node.id)
+                    else:
+                        running[pool.submit(_run, node)] = node
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    node = running.pop(fut)
+                    try:
+                        ctx = fut.result()
+                    except BaseException as exc:  # re-raised once running nodes finish
+                        error = error or exc
+                        continue
+                    finished.add(node.id)
+                    _after(node, ctx)
+        if error is not None:
+            raise error
+        while rerun_queue:
             node = rerun_queue.popleft()
             _after(node, self.run_node(node))
         return self._run_log

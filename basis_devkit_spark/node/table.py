@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from basis_devkit_spark.session import sql_over_views
 from basis_devkit_spark.storage.store import TableStore
 
 Records = list[dict[str, Any]]
@@ -339,30 +340,28 @@ class Table:
         pdf = df.toPandas()
         return pdf.to_dict("records") if as_format == "records" else pdf
 
-    def _bind_sql_view(self, sql: str) -> None:
-        """Register the active version as a temp view for ``sql``. When the
-        WHERE clause carries provably-conjunctive predicates on stats
-        columns, the view binds over ``read_pruned`` — footer-stats file
-        skipping BEFORE Spark lists the lineage — instead of the full file
-        list (Catalyst row-group pruning still applies either way; this
-        removes whole files from the plan)."""
+    def _sql_over_view(self, sql: str) -> DataFrame:
+        """Run ``sql`` with the active version bound as a temp view under
+        ``sql_name``. When the WHERE clause carries provably-conjunctive
+        predicates on stats columns, the view binds over ``read_pruned`` —
+        footer-stats file skipping BEFORE Spark lists the lineage — instead
+        of the full file list (Catalyst row-group pruning still applies
+        either way; this removes whole files from the plan)."""
         store = self._require_store()
         filters = _prunable_filters(
             sql, self.sql_name, store._manifest.stats_columns or []
         )
         bound = store.read_pruned(filters) if filters else store.read()
-        bound.createOrReplaceTempView(self.sql_name)
+        return sql_over_views(self._spark, {self.sql_name: bound}, sql)
 
     def read_sql(
         self, sql: str, as_format: str = "records", chunksize: int | None = None
     ) -> Any:
         """Run a SQL select; this table interpolates via str(self)
         (node.py:168-189). Registers the active version as a temp view
-        (stats-pruned when the WHERE allows — see ``_bind_sql_view``)."""
+        (stats-pruned when the WHERE allows — see ``_sql_over_view``)."""
         self.flush()
-        spark = self._spark
-        self._bind_sql_view(sql)
-        df = spark.sql(sql)
+        df = self._sql_over_view(sql)
         if as_format == "dataframe" and chunksize is None:
             return df.toPandas()
         if chunksize is not None:
@@ -376,8 +375,7 @@ class Table:
         """Spark-native variant: lazy DataFrame result (stats-pruned view
         binding, same as ``read_sql``)."""
         self.flush()
-        self._bind_sql_view(sql)
-        return self._spark.sql(sql)
+        return self._sql_over_view(sql)
 
     # ---------------- writes (A4-A8, buffered per node.py:305-307) ----------------
     def _to_df(self, records: WriteInput) -> DataFrame:
@@ -465,18 +463,16 @@ class Table:
             sql,
             re.IGNORECASE | re.DOTALL,
         )
-        if store.exists:
-            store.read().createOrReplaceTempView(self.sql_name)
+        m = m_create or m_insert
+        views = {self.sql_name: store.read()} if store.exists else {}
+        df = sql_over_views(spark, views, m.group(1) if m else sql)
         if m_create:
-            df = spark.sql(m_create.group(1))
             store.write_replace(df)
             self._signals.append("create")
         elif m_insert:
-            df = spark.sql(m_insert.group(1))
             store.append(df)
             self._signals.append("update")
         else:
-            spark.sql(sql)
             self._signals.append("update")
 
     # ---------------- signals (A10) ----------------

@@ -932,9 +932,10 @@ def a30(spark: SparkSession, sf: str) -> DataFrame:
     from rev join cnt on rev.o_custkey = cnt.o_custkey
     where rev.spend > 1000000
     """,
-    doc="level-parallel graph execution: two independent SQL nodes run "
-    "concurrently (run_graph(parallelism=4)), a third joins their outputs "
-    "— results must equal the equivalent single-query relation exactly",
+    doc="dataflow graph execution: two independent SQL nodes run "
+    "concurrently (run_graph(parallelism=4)), a third starts once both "
+    "commit and joins their outputs — results must equal the equivalent "
+    "single-query relation exactly",
 )
 def a27(spark: SparkSession, sf: str) -> DataFrame:
     import os as _os

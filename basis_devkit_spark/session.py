@@ -8,8 +8,9 @@ here is local-mode-specific except the master default.
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULT_CONFS: dict[str, str] = {
     # Adaptive query execution: runtime re-planning, skew-join splitting,
@@ -32,7 +33,28 @@ _DEFAULT_CONFS: dict[str, str] = {
     # No pre-1582 dates in our data: skip per-value rebase checks on scan.
     "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
+    # INT96 timestamps carry no parquet footer min/max: TIMESTAMP_MICROS
+    # keeps data skipping on timestamp columns (TableStore also sets it).
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
+
+_TEMP_VIEW_LOCK = threading.Lock()
+
+
+def sql_over_views(
+    spark: SparkSession, views: dict[str, DataFrame], sql: str
+) -> DataFrame:
+    """Register ``views`` as temp views and run ``sql`` over them.
+
+    Temp views are global to a session: a name one node binds could be
+    rebound by a concurrently running node before the first node's
+    statement reads it. Binding and ``spark.sql`` (which analyzes eagerly,
+    resolving each view into the plan) happen under one lock; building
+    the frames and executing the result stay outside it."""
+    with _TEMP_VIEW_LOCK:
+        for name, df in views.items():
+            df.createOrReplaceTempView(name)
+        return spark.sql(sql)
 
 
 def get_spark(

@@ -54,7 +54,6 @@ import functools
 import json
 import os
 import shutil
-import threading
 import time
 from dataclasses import dataclass, field
 from typing import Any
@@ -68,6 +67,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 MANIFEST = "_manifest.json"
+_TS_TYPE_KEY = "spark.sql.parquet.outputTimestampType"
 
 
 class SchemaMismatchError(ValueError):
@@ -80,10 +80,6 @@ class ConcurrentWriteError(RuntimeError):
     manifest — committing would silently drop their version (lost
     update). Call ``refresh()`` and re-derive the write, or serialize
     writers (the engine does: one cached handle per store)."""
-
-# Serializes the scoped outputTimestampType set/restore across concurrent
-# node writes (session conf is global to the SparkSession).
-_WRITE_CONF_LOCK = threading.Lock()
 
 # CommonModel-ish type names → Spark types (SURVEY §1.2 mapping).
 FIELD_TYPE_MAP: dict[str, T.DataType] = {
@@ -226,6 +222,14 @@ class TableStore:
         self.spark = spark
         self.path = os.path.join(root, name)
         os.makedirs(self.path, exist_ok=True)
+        # Spark's legacy INT96 parquet timestamps carry NO footer min/max,
+        # which would silently disable data skipping on every timestamp
+        # column. Switch the session to TIMESTAMP_MICROS once and leave it
+        # there: a per-write option is ignored, and a scoped set/restore
+        # would have to hold a lock across the lazy write — the node's
+        # whole computation — serializing concurrent nodes.
+        if spark.conf.get(_TS_TYPE_KEY) != "TIMESTAMP_MICROS":
+            spark.conf.set(_TS_TYPE_KEY, "TIMESTAMP_MICROS")
         self._manifest = self._load_manifest()
         self._loaded_seq = self._manifest.commit_seq
         # Batches pinned (persisted) during a write so the id-assignment
@@ -1036,35 +1040,17 @@ class TableStore:
             import uuid as _uuid
 
             tmp = f"__bds_bw_{_uuid.uuid4().hex[:12]}"
-            key = "spark.sql.parquet.outputTimestampType"
-            with _WRITE_CONF_LOCK:
-                prev = self.spark.conf.get(key)
-                self.spark.conf.set(key, "TIMESTAMP_MICROS")
-                try:
-                    (
-                        w.bucketBy(self._manifest.num_buckets or 8, *bb)
-                        .sortBy(*bb)
-                        .option("path", path)
-                        .saveAsTable(tmp)
-                    )
-                finally:
-                    self.spark.conf.set(key, prev)
-                    self.spark.sql(f"drop table if exists {tmp}")
-            return
-        # Spark's legacy INT96 parquet timestamp encoding carries NO footer
-        # min/max statistics, which would silently disable data skipping on
-        # every timestamp column. Force TIMESTAMP_MICROS for OUR writes
-        # only — scoped set/restore under a process-wide lock so
-        # level-parallel graph execution (engine.run_graph(parallelism>1))
-        # can't interleave two set/restore pairs and leak the conf.
-        key = "spark.sql.parquet.outputTimestampType"
-        with _WRITE_CONF_LOCK:
-            prev = self.spark.conf.get(key)
-            self.spark.conf.set(key, "TIMESTAMP_MICROS")
             try:
-                w.parquet(path)
+                (
+                    w.bucketBy(self._manifest.num_buckets or 8, *bb)
+                    .sortBy(*bb)
+                    .option("path", path)
+                    .saveAsTable(tmp)
+                )
             finally:
-                self.spark.conf.set(key, prev)
+                self.spark.sql(f"drop table if exists {tmp}")
+            return
+        w.parquet(path)
 
     def _write_counted(self, df: DataFrame, path: str) -> int:
         """Overwrite-write ``df`` to ``path`` and return its row count,

@@ -1144,3 +1144,135 @@ def test_corpus_health_example_app(spark, tmp_path):
     assert clus.agg(F.sum("n_vecs")).collect()[0][0] == emb.count()
     summ = eng.table_df("health_summary").collect()
     assert len(summ) == 1 and summ[0]["n_docs"] == docs.count()
+
+
+def test_store_cache_one_handle_under_concurrent_first_touch(
+    spark, tmp_path, monkeypatch
+):
+    """Threads touching a store for the first time at once must all get
+    the engine's single cached handle — a second handle would commit
+    against a stale commit_seq (ConcurrentWriteError) or read a stale
+    manifest. Handle construction is slowed to widen the race."""
+    import sys
+    import threading
+    import time
+
+    from basis_devkit_spark.engine import engine as engine_mod
+
+    opened = []
+
+    class SlowStore(engine_mod.TableStore):
+        def __init__(self, *a, **kw):
+            time.sleep(0.05)
+            super().__init__(*a, **kw)
+            opened.append(self)
+
+    monkeypatch.setattr(engine_mod, "TableStore", SlowStore)
+    eng = Engine(spark, str(tmp_path / "store"))
+    start = threading.Barrier(16, timeout=30)
+    got = []
+
+    def touch():
+        start.wait()
+        got.append(eng.store("x"))
+
+    threads = [threading.Thread(target=touch) for _ in range(16)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 16 and all(h is got[0] for h in got)
+    assert len(opened) == 1
+
+
+_DATAFLOW_YML = """
+functions:
+  - uses: t/a@v1
+    id: a
+    outputs: { out: ta }
+  - uses: t/b@v1
+    id: b
+    inputs: { src: ta }
+    outputs: { out: tb }
+  - uses: t/s@v1
+    id: s
+    outputs: { out: ts }
+stores:
+  - table: ta
+  - table: tb
+  - table: ts
+"""
+
+
+@pytest.mark.parametrize("parallelism", [None, 4])
+def test_run_graph_starts_node_when_its_inputs_commit(spark, tmp_path, parallelism):
+    """Dataflow, not level barriers: in a chain a -> b beside an
+    independent node s, b starts as soon as a commits — while s (same
+    topological level as a) is still running. s waits for b's signal;
+    a level-by-level or sequential run makes b wait for s instead."""
+    import threading
+
+    b_ran = threading.Event()
+    seen = {}
+    app = write_app(tmp_path / "app", _DATAFLOW_YML)
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.register_component("t/a@v1", lambda engine, node: None)
+    eng.register_component("t/b@v1", lambda engine, node: b_ran.set())
+    eng.register_component(
+        "t/s@v1", lambda engine, node: seen.update(b_during_s=b_ran.wait(20))
+    )
+    kwargs = {} if parallelism is None else {"parallelism": parallelism}
+    eng.run_graph(**kwargs)
+    assert seen == {"b_during_s": True}
+    assert {e["node"] for e in eng.run_log} == {"a", "b", "s"}
+
+
+def test_run_graph_failure_stops_submission_and_reraises(spark, tmp_path):
+    """A node raising during a concurrent pass: run_graph re-raises that
+    error, the node downstream of it never runs, and the commit of an
+    independent node that was already running stands."""
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - node_file: boom.py
+            id: boom
+            inputs: { src: numbers }
+            outputs: { out: broken }
+          - node_file: after.sql
+            id: downstream
+            inputs: { src: broken }
+            outputs: { out: after }
+          - node_file: indep.sql
+            id: zz_indep
+            inputs: { src: numbers }
+            outputs: { out: kept }
+        stores:
+          - table: numbers
+          - table: broken
+          - table: after
+          - table: kept
+        """,
+        **{
+            "boom.py": """
+            raise RuntimeError("node boom failed")
+            """,
+            "after.sql": "select * from {{ src }}",
+            "indep.sql": "select n * 10 as n from {{ src }}",
+        },
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.seed_store("numbers", spark.createDataFrame([(1,), (2,)], "n int"))
+    with pytest.raises(RuntimeError, match="node boom failed"):
+        eng.run_graph()
+    assert [e["node"] for e in eng.run_log] == ["zz_indep"]
+    assert not eng.store("after").has_active_version()
+    assert sorted(r.n for r in eng.table_df("kept").collect()) == [10, 20]

@@ -65,6 +65,44 @@ def test_prunable_filters_soundness():
     assert _prunable_filters("select * from t where k > 5", "t", []) == []
 
 
+def test_concurrent_read_sql_keeps_each_tables_own_view(spark, tmp_path):
+    """Temp views are session-global and read_sql binds one under the
+    port name. Concurrent nodes whose ports share a name but point at
+    different stores must each query their own store: binding and the
+    statement's analysis happen atomically."""
+    import sys
+    import threading
+
+    tables = []
+    for i in range(4):
+        st = TableStore(str(tmp_path), f"s{i}", spark)
+        st.write_replace(spark.createDataFrame([(i,)], "k int"))
+        t = Table("t", "r")
+        t.bind(st, spark)
+        tables.append(t)
+    wrong = []
+
+    def query(i, t):
+        for _ in range(20):
+            files = t.read_sql_dataframe(f"select k from {t}").inputFiles()
+            wrong.extend(f for f in files if f"/s{i}/" not in f)
+
+    threads = [
+        threading.Thread(target=query, args=(i, t)) for i, t in enumerate(tables)
+    ]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert wrong == []
+
+
 def test_read_sql_binds_stats_pruned_view(spark, tmp_path):
     """A read_sql WHERE on a stats column binds the view over read_pruned:
     the plan's input files shrink to the surviving appends, and results

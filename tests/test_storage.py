@@ -515,6 +515,33 @@ def test_stats_prune_on_timestamp_column(spark, tmp_path):
     assert len(out.inputFiles()) < 4
 
 
+def test_int96_session_still_writes_prunable_timestamps(spark, tmp_path):
+    """A session configured for INT96 parquet timestamps (no footer
+    min/max) must still get TIMESTAMP_MICROS store writes: the write
+    records dir_stats min/max for the timestamp column and read_pruned
+    skips files on it."""
+    import datetime as dt
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    st = TableStore(str(tmp_path), "t", s)
+    st.configure(stats_columns=["ts"])
+    base = dt.datetime(2024, 1, 1)
+    rows = [(base + dt.timedelta(hours=i), i) for i in range(96)]
+    st.write_replace(
+        s.createDataFrame(rows, "ts timestamp, n int").repartitionByRange(4, "ts")
+    )
+    file_stats = [
+        f for d in st._manifest.dir_stats.values() for f in d.values()
+    ]
+    assert len(file_stats) == 4
+    assert all(len(f["ts"]) == 2 for f in file_stats)
+    cut = base + dt.timedelta(hours=90)
+    out = st.read_pruned([("ts", ">", cut)])
+    assert sorted(r.n for r in out.collect()) == list(range(91, 96))
+    assert len(out.inputFiles()) < len(st.read().inputFiles()) == 4
+
+
 def test_stats_prune_timestamp_non_utc_session(spark, tmp_path):
     """Regression: instant-typed footer stats are UTC epochs while a naive
     filter literal is interpreted in the SESSION timezone — on a non-UTC
