@@ -1,7 +1,6 @@
 """Event analytics operators (SURVEY §2.E): gap sessionization, ordered
-funnels (per-step and single-pass strategies, optional bounded
-conversion window), retention cohorts, transition matrices, conversion
-latency, session paths, RFM profiles.
+funnels (optional bounded conversion window), retention cohorts,
+transition matrices, conversion latency, session paths, RFM profiles.
 
 The reference's hosted SQL surface serves exactly this kind of product
 analytics over event streams (webhook-ingested tables; cf.
@@ -11,9 +10,12 @@ declarative Spark plan:
 - ``sessionize``: one shuffle on the user key, then a single window pass
   (lag + running sum) — per-user state is bounded, so the shape holds at
   any fan-out of users.
-- ``funnel``: per-step conditional MIN aggregations; the per-user step
-  frame stays user-cardinality-sized (≪ events) and is broadcast back —
-  the events fact is scanned once per step but never self-joined.
+- ``funnel``: one scan of the step events and two exchanges — each
+  user's ``(ts, event)`` pairs are collected and sorted in one array
+  (hash exchange on the user key) and folded by an ``aggregate`` HOF
+  step machine, then one global agg counts users per step. The events
+  fact is never joined; the cost is that one user's step events are
+  held in one array.
 - ``retention_cohorts``: two hash aggs (first-touch, distinct activity)
   joined on the user key; the output is cohort × offset, tiny by
   construction.
@@ -93,62 +95,103 @@ def funnel(
     user_col: str = "user_id",
     ts_col: str = "ts",
     event_col: str = "event_type",
-    broadcast_user_frames: bool = True,
     within_minutes: int | None = None,
 ) -> DataFrame:
     """Strictly-ordered funnel: for each step k, count users whose
     earliest qualifying step-k event happened AFTER their earliest
     qualifying step-(k-1) event. Returns one row per step:
-    ``(step, event_type, users)``. With ``within_minutes``, every later
-    step must also land within that window of the user's FIRST-step
-    event (the standard bounded conversion window).
+    ``(step, event_type, users)``, every field non-nullable. With
+    ``within_minutes``, every later step must also land within that
+    window of the user's FIRST-step event (the standard bounded
+    conversion window).
 
-    Shape at scale: step 1 is one hash agg over the (filtered) events;
-    each later step joins the events fact against the previous step's
-    per-user frame — user-cardinality-sized — and aggregates again.
-    Events are never self-joined. ``broadcast_user_frames`` forces the
-    user-frame side to broadcast (right for the usual users ≪ events
-    case); pass False when the user dimension itself is huge (1e9+ ids)
-    and the step joins should shuffle-hash on the user key instead.
+    Shape at scale: one scan of the step events and two exchanges. Per
+    user, ``collect_list`` + ``array_sort`` orders the ``(ts, event)``
+    pairs (the hash exchange on the user key) and an ``aggregate`` HOF
+    walks them over an ``(idx, t_last, t_first)`` state: the sorted walk
+    meets each step's earliest qualifying event first, so advancing on
+    it reproduces the per-step MIN definition. One global agg counts
+    users per reached step (the second exchange). Trade-off: a user's
+    step events are held in one array, so per-user memory grows with
+    the busiest user's step-event count.
+
+    NULLs follow the SQL definition (``queries/analytics.py`` e02/e02b):
+    a NULL user counts at step 1 only (a group, but never joinable); a
+    step-1 event with NULL ``ts`` counts its user at step 1 but anchors
+    no later step, so NULL-ts events sort last and never advance a
+    started walk.
     """
     if not steps:
         raise ValueError("funnel needs at least one step")
-    prev: DataFrame | None = None
-    out: DataFrame | None = None
-    for k, step in enumerate(steps, start=1):
-        ev = df.filter(F.col(event_col) == step).select(
-            F.col(user_col).alias("__u"), F.col(ts_col).alias("__t")
-        )
-        if prev is None:
-            cur = ev.groupBy("__u").agg(F.min("__t").alias("__t_min"))
-            cur = cur.withColumn("__t_first", F.col("__t_min"))
-        else:
-            j = ev.join(
-                _maybe_broadcast(
-                    prev.select(
-                        F.col("__u").alias("__pu"), "__t_min", "__t_first"
-                    ),
-                    broadcast_user_frames,
-                ),
-                F.col("__u") == F.col("__pu"),
-            ).filter(F.col("__t") > F.col("__t_min"))
-            if within_minutes is not None:
-                j = j.filter(
-                    F.col("__t")
-                    <= F.col("__t_first")
-                    + F.expr(f"interval {int(within_minutes)} minutes")
+    t = F.col(ts_col)
+    per_user = (
+        df.filter(F.col(event_col).isin(steps))
+        .groupBy(F.col(user_col).alias("__u"))
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    # leading isNull key: NULL-ts events sort last
+                    F.struct(
+                        t.isNull().alias("n"),
+                        t.alias("t"),
+                        F.col(event_col).alias("e"),
+                    )
                 )
-            cur = j.groupBy("__u", "__t_first").agg(
-                F.min("__t").alias("__t_min")
-            )
-        step_row = cur.agg(
-            F.lit(k).alias("step"),
-            F.lit(step).alias("event_type"),
-            F.count(F.lit(1)).alias("users"),
+            ).alias("__evs")
         )
-        out = step_row if out is None else out.unionByName(step_row)
-        prev = cur
-    return out
+    )
+    ts_type = df.schema[ts_col].dataType
+    init = F.struct(
+        F.lit(0).alias("idx"),
+        F.lit(None).cast(ts_type).alias("t_last"),
+        F.lit(None).cast(ts_type).alias("t_first"),
+    )
+    steps_arr = F.array(*[F.lit(s) for s in steps])
+
+    def advance(acc, x):
+        # get() is NULL past the last step (element_at would raise, ANSI)
+        is_next = x["e"] == F.get(steps_arr, acc["idx"])
+        # NULL (no advance) when t_last is NULL or x["t"] is NULL
+        later = x["t"] > acc["t_last"]
+        if within_minutes is not None:
+            window = F.expr(f"interval {int(within_minutes)} minutes")
+            later = later & (x["t"] <= acc["t_first"] + window)
+        return F.when(
+            is_next & ((acc["idx"] == 0) | later),
+            F.struct(
+                (acc["idx"] + 1).alias("idx"),
+                x["t"].alias("t_last"),
+                F.coalesce(acc["t_first"], x["t"]).alias("t_first"),
+            ),
+        ).otherwise(acc)
+
+    # least() skips NULLs: the cap applies to the NULL-user group only
+    reached = F.least(
+        F.aggregate(F.col("__evs"), init, advance)["idx"],
+        F.when(F.col("__u").isNull(), F.lit(1)),
+    )
+    counts = per_user.select(reached.alias("__r")).agg(
+        *[
+            F.count(F.when(F.col("__r") >= k, 1)).alias(f"__s{k}")
+            for k in range(1, len(steps) + 1)
+        ]
+    )
+    # inline over an array of non-null structs keeps every output field
+    # non-nullable (stack() would make them nullable)
+    return counts.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(k).alias("step"),
+                        F.lit(s).alias("event_type"),
+                        F.col(f"__s{k}").alias("users"),
+                    )
+                    for k, s in enumerate(steps, start=1)
+                ]
+            )
+        )
+    )
 
 
 def retention_cohorts(
@@ -223,8 +266,8 @@ def conversion_latency(
     ``(n_converted, min_us, max_us, sum_us)`` — all exact integers, so
     any mean/rate derived downstream is reproducible across engines.
 
-    Same shape as :func:`funnel` steps: two conditional-MIN aggs with a
-    broadcast user-frame join between them; the fact never self-joins.
+    Two conditional-MIN aggs with a broadcast user-frame join between
+    them; the fact never self-joins.
     """
     src = df.filter(F.col(event_col) == from_event).groupBy(
         F.col(user_col).alias("__u")
@@ -288,68 +331,6 @@ def session_paths(
         .agg(F.count(F.lit(1)).alias("n_sessions"))
         .orderBy(F.col("n_sessions").desc(), "path")
         .limit(k)
-    )
-
-
-def funnel_single_pass(
-    df: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    event_col: str = "event_type",
-) -> DataFrame:
-    """Semantically identical to :func:`funnel` (strict ordering, earliest
-    qualifying events) in ONE scan: per user, sort the (ts, event) pairs
-    and walk them with an ``aggregate`` HOF, advancing a (step index,
-    last-ts) state machine. Returns the same ``(step, event_type,
-    users)`` rows.
-
-    Trade-off vs the per-step strategy: one events scan + one shuffle
-    (vs k filtered scans + k small aggs), but per-user memory is the
-    user's full event list — prefer :func:`funnel` when single users can
-    own millions of events, this form when the fact is scan-dominated.
-    """
-    if not steps:
-        raise ValueError("funnel needs at least one step")
-    steps_arr = F.array(*[F.lit(s) for s in steps])
-    per_user = (
-        df.filter(F.col(event_col).isin(steps))
-        .groupBy(F.col(user_col).alias("__u"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(ts_col).alias("t"),
-                                        F.col(event_col).alias("e")))
-            ).alias("__evs")
-        )
-    )
-    # state: (idx = steps completed, t = ts of the last completed step)
-    init = F.struct(
-        F.lit(0).alias("idx"), F.lit(None).cast("timestamp").alias("t")
-    )
-    walk = F.aggregate(
-        F.col("__evs"),
-        init,
-        lambda acc, x: F.when(
-            (acc["idx"] < F.lit(len(steps)))
-            & (x["e"] == F.element_at(steps_arr, acc["idx"] + 1))
-            & (acc["t"].isNull() | (x["t"].cast("timestamp") > acc["t"])),
-            F.struct((acc["idx"] + 1).alias("idx"),
-                     x["t"].cast("timestamp").alias("t")),
-        ).otherwise(acc),
-    )
-    reached = per_user.select(walk["idx"].alias("__reached"))
-    conds = [
-        F.sum((F.col("__reached") >= k).cast("long")).alias(f"__s{k}")
-        for k in range(1, len(steps) + 1)
-    ]
-    wide = reached.agg(*conds)
-    stack_args = ", ".join(
-        f"{k}, '{steps[k - 1]}', __s{k}" for k in range(1, len(steps) + 1)
-    )
-    return wide.selectExpr(
-        f"stack({len(steps)}, {stack_args}) as (step, event_type, users)"
-    ).select(
-        F.col("step").cast("int").alias("step"), "event_type", "users"
     )
 
 

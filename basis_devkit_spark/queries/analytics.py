@@ -2211,10 +2211,10 @@ def e01(spark: SparkSession, sf: str) -> DataFrame:
     union all
     select cast(3 as int), 'purchase', (select count(*) from s3)
     """,
-    doc="strictly-ordered funnel view→click→purchase: per-step earliest "
-    "qualifying event via conditional MIN aggs; each later step joins the "
-    "fact against the user-sized previous-step frame (broadcast) — the "
-    "events fact never self-joins",
+    doc="strictly-ordered funnel view→click→purchase in one scan: each "
+    "user's sorted (ts, event) array is folded by an aggregate-HOF step "
+    "machine that meets each step's earliest qualifying event first, then "
+    "one global count per step — two exchanges, no joins",
 )
 def e02(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.operators.events import funnel
@@ -2367,7 +2367,8 @@ def e06(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="bounded-window funnel: every later step must land within 24h of "
     "the user's first-step event — the standard conversion-window "
-    "semantics; the first-step timestamp rides the per-user step frame",
+    "semantics; the first-step timestamp rides the per-user fold state, "
+    "same one-scan plan as e02",
 )
 def e02b(spark: SparkSession, sf: str) -> DataFrame:
     from basis_devkit_spark.operators.events import funnel

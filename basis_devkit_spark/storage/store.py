@@ -1006,7 +1006,10 @@ class TableStore:
             self._pinned.pop().unpersist()
 
     # ---------------- writes (A4, A5, A6, A7) ----------------
-    def _write(self, df: DataFrame, path: str, mode: str) -> None:
+    def _write(self, df: DataFrame, path: str, mode: str, **options) -> None:
+        """Write ``df`` in the store's layout; ``options`` are writer
+        options scoped to this one write (never session conf, which
+        concurrent writers share)."""
         cb = self._manifest.cluster_by
         zb = self._manifest.zorder_by
         if zb and all(c in df.columns for c in zb):
@@ -1028,7 +1031,7 @@ class TableStore:
             # range of the cluster key → footer stats prune hard. One
             # extra range shuffle per write; reads win it back every time.
             df = df.repartitionByRange(*cb).sortWithinPartitions(*cb)
-        w = df.write.mode(mode)
+        w = df.write.mode(mode).options(**options)
         if self._manifest.partition_by:
             w = w.partitionBy(*self._manifest.partition_by)
         bb = self._manifest.bucket_by
@@ -1052,7 +1055,7 @@ class TableStore:
             return
         w.parquet(path)
 
-    def _write_counted(self, df: DataFrame, path: str) -> int:
+    def _write_counted(self, df: DataFrame, path: str, **options) -> int:
         """Overwrite-write ``df`` to ``path`` and return its row count,
         captured via ``df.observe`` DURING the write job — one pass, never
         a re-read of the written output (which doubles I/O at scale).
@@ -1088,7 +1091,7 @@ class TableStore:
         if drop:
             for expr in exps.values():
                 df = df.filter(_passes(expr))
-        self._write(df, path, "overwrite")
+        self._write(df, path, "overwrite", **options)
         self._collect_file_stats(os.path.relpath(path, self.path))
         got = obs.get
         self._last_violations = {
@@ -1138,11 +1141,12 @@ class TableStore:
                 f"match the declared schema; extra={extra} missing={missing}"
             )
 
-    def _commit_single_dir_version(self, df: DataFrame) -> tuple[int, int]:
+    def _commit_single_dir_version(self, df: DataFrame, **options) -> tuple[int, int]:
         """Write ``df`` as a fresh one-directory version; returns (v, n).
-        Does NOT flip the active pointer — callers commit."""
+        ``options`` are writer options for this write only. Does NOT flip
+        the active pointer — callers commit."""
         v = self.create_new_version()
-        n = self._write_counted(df, self.version_path(v))
+        n = self._write_counted(df, self.version_path(v), **options)
         self._set_version_dirs(v, [f"v={v}"])
         self._record_schema(v, df)
         self._record_violations(v)
@@ -1257,9 +1261,9 @@ class TableStore:
         extra agg scan, acceptable for a maintenance op) assigns each
         value ``ceil(rows / max_records_per_file)`` salt splits (capped at
         1024), so a skewed value rewrites across a bounded number of
-        parallel tasks, and ``spark.sql.files.maxRecordsPerFile`` caps the
-        output file size on every path. An unpartitioned store keeps the
-        plain rewrite: its file count equals the scan's task count,
+        parallel tasks, and the write's ``maxRecordsPerFile`` option caps
+        the output file size on every path. An unpartitioned store keeps
+        the plain rewrite: its file count equals the scan's task count,
         already bounded by maxPartitionBytes."""
         df = self.read()
         pcols = self._manifest.partition_by
@@ -1294,14 +1298,12 @@ class TableStore:
             else:
                 df = df.repartition(*keys)
         n0 = self.record_count
-        key = "spark.sql.files.maxRecordsPerFile"
-        prev = self.spark.conf.get(key, "0")
-        if max_records_per_file > 0:
-            self.spark.conf.set(key, str(max_records_per_file))
-        try:
-            v, n = self._commit_single_dir_version(df)
-        finally:
-            self.spark.conf.set(key, prev)
+        cap = (
+            {"maxRecordsPerFile": max_records_per_file}
+            if max_records_per_file > 0
+            else {}
+        )
+        v, n = self._commit_single_dir_version(df, **cap)
         self.set_active_version(v, record_count=n0 if n0 is not None else n)
         return v
 

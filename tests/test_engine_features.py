@@ -812,7 +812,7 @@ def test_event_analytics_pipeline_through_engine(spark, tmp_path):
 
 
 def test_funnel_empty_step_yields_zero_not_error(spark):
-    from basis_devkit_spark.operators.events import funnel, funnel_single_pass
+    from basis_devkit_spark.operators.events import funnel
 
     df = spark.createDataFrame(
         [(1, "a", __import__("datetime").datetime(2024, 1, 1))],
@@ -820,11 +820,6 @@ def test_funnel_empty_step_yields_zero_not_error(spark):
     )
     out = {r["step"]: r["users"] for r in funnel(df, ["a", "zz", "c"]).collect()}
     assert out == {1: 1, 2: 0, 3: 0}
-    out2 = {
-        r["step"]: r["users"]
-        for r in funnel_single_pass(df, ["a", "zz", "c"]).collect()
-    }
-    assert out2 == out
 
 
 def test_pretrain_pipeline_example_app(spark, tmp_path):

@@ -1559,19 +1559,11 @@ def test_event_ops_broadcast_flag_equivalent(spark):
     result-identical to the broadcast default."""
     from basis_devkit_spark.operators.events import (
         conversion_latency,
-        funnel,
         retention_cohorts,
     )
     from basis_devkit_spark.queries import load
 
     ev = load(spark, "/root/testdata/sf0.001", "events")
-    steps = ["view", "click", "purchase"]
-    a = {r["step"]: r["users"] for r in funnel(ev, steps).collect()}
-    b = {
-        r["step"]: r["users"]
-        for r in funnel(ev, steps, broadcast_user_frames=False).collect()
-    }
-    assert a == b
     ra = sorted(map(tuple, retention_cohorts(ev).collect()))
     rb = sorted(
         map(tuple, retention_cohorts(ev, broadcast_user_frames=False).collect())
@@ -1650,42 +1642,57 @@ def test_session_paths_handcomputed(spark):
     assert out == [("a->b", 2), ("c", 1)]
 
 
-def test_funnel_matches_pandas_model_random(spark):
-    """Randomized parity: strict-order funnel counts equal an independent
-    pandas per-user scan model."""
+def _funnel_pandas_model(pdf, steps, within_minutes=None):
+    """Independent per-user scan model of the strict-order funnel: step k
+    is the earliest step-k event strictly after step k-1 (and, with a
+    window, at most ``within_minutes`` after step 1)."""
+    import datetime as dt
+
+    want = {k: 0 for k in range(1, len(steps) + 1)}
+    for _, g in pdf.groupby("user_id"):
+        t_prev = t_first = None
+        for k, step in enumerate(steps, start=1):
+            sel = g[g.event_type == step]
+            if t_prev is not None:
+                sel = sel[sel.ts > t_prev]
+                if within_minutes is not None:
+                    sel = sel[sel.ts <= t_first + dt.timedelta(minutes=within_minutes)]
+            if sel.empty:
+                break
+            t_prev = sel.ts.min()
+            if k == 1:
+                t_first = t_prev
+            want[k] += 1
+    return want
+
+
+def _random_funnel_events(seed, n, n_users):
     import datetime as dt
 
     import numpy as np
     import pandas as pd
 
-    from basis_devkit_spark.operators.events import funnel
-
-    rng = np.random.default_rng(11)
-    n = 1500
+    rng = np.random.default_rng(seed)
     base = dt.datetime(2024, 1, 1)
-    pdf = pd.DataFrame(
+    return pd.DataFrame(
         {
-            "user_id": rng.integers(0, 60, n),
+            "user_id": rng.integers(0, n_users, n),
             "event_type": rng.choice(["a", "b", "c", "x"], n),
             "ts": [base + dt.timedelta(seconds=int(x)) for x in
                    rng.choice(10**7, n, replace=False)],
         }
     )
+
+
+def test_funnel_matches_pandas_model_random(spark):
+    """Randomized parity: strict-order funnel counts equal an independent
+    pandas per-user scan model."""
+    from basis_devkit_spark.operators.events import funnel
+
+    pdf = _random_funnel_events(11, 1500, 60)
     steps = ["a", "b", "c"]
     got = {r["step"]: r["users"] for r in funnel(spark.createDataFrame(pdf), steps).collect()}
-
-    want = {1: 0, 2: 0, 3: 0}
-    for _, g in pdf.sort_values("ts").groupby("user_id"):
-        t_prev = None
-        for k, step in enumerate(steps, start=1):
-            sel = g[g.event_type == step]
-            if t_prev is not None:
-                sel = sel[sel.ts > t_prev]
-            if sel.empty:
-                break
-            t_prev = sel.ts.min()
-            want[k] += 1
-    assert got == want
+    assert got == _funnel_pandas_model(pdf, steps)
 
 
 def test_funnel_within_window(spark):
@@ -1711,32 +1718,114 @@ def test_funnel_within_window(spark):
     assert bounded == {1: 2, 2: 1}
 
 
-def test_funnel_single_pass_equivalent_random(spark):
-    """The one-scan array-fold funnel must match the per-step strategy on
-    random data (including the handcrafted edge rows)."""
-    import datetime as dt
+def test_funnel_within_window_matches_pandas_model_random(spark):
+    """Randomized parity with a bounded conversion window: funnel counts
+    equal the pandas per-user model for windows that do and do not bind
+    (steps ~19 days apart on average; 7- and 30-day windows)."""
+    from basis_devkit_spark.operators.events import funnel
 
-    import numpy as np
-    import pandas as pd
-
-    from basis_devkit_spark.operators.events import funnel, funnel_single_pass
-
-    rng = np.random.default_rng(23)
-    n = 1200
-    base = dt.datetime(2024, 1, 1)
-    pdf = pd.DataFrame(
-        {
-            "user_id": rng.integers(0, 50, n),
-            "event_type": rng.choice(["a", "b", "c", "x"], n),
-            "ts": [base + dt.timedelta(seconds=int(x)) for x in
-                   rng.choice(10**7, n, replace=False)],
-        }
-    )
+    pdf = _random_funnel_events(23, 1200, 50)
     df = spark.createDataFrame(pdf)
     steps = ["a", "b", "c"]
-    a = sorted(map(tuple, funnel(df, steps).collect()))
-    b = sorted(map(tuple, funnel_single_pass(df, steps).collect()))
-    assert a == b
+    unbounded = _funnel_pandas_model(pdf, steps)
+    for within in (7 * 1440, 30 * 1440):
+        want = _funnel_pandas_model(pdf, steps, within)
+        assert want != unbounded  # the window binds on this data
+        got = {
+            r["step"]: r["users"]
+            for r in funnel(df, steps, within_minutes=within).collect()
+        }
+        assert got == want, within
+
+
+def test_funnel_edge_cases_match_oracle_sql(spark):
+    """The e02/e02b oracle SQL (DuckDB) defines the funnel on the cases a
+    per-user fold can get wrong: no step events (0, not NULL), a NULL
+    user (step 1 only), NULL ts (counts at step 1, anchors nothing), a
+    repeated step and equal timestamps (strictly later only). The output
+    schema stays non-nullable in every case."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from basis_devkit_spark.operators.events import funnel
+    from basis_devkit_spark.queries import all_queries
+
+    t0 = dt.datetime(2024, 1, 1)
+    m = dt.timedelta(minutes=1)
+    frames = {
+        "no_step_events": [(1, "signup", t0), (2, "error", t0 + m)],
+        "null_user": [
+            (None, "view", t0), (None, "click", t0 + m),
+            (None, "purchase", t0 + 2 * m),
+            (1, "view", t0), (1, "click", t0 + m),
+        ],
+        "null_ts": [
+            # only a NULL-ts first step: step 1, nothing later
+            (1, "view", None), (1, "click", t0), (1, "purchase", t0 + m),
+            # NULL-ts and dated first steps: MIN ignores the NULL
+            (2, "view", None), (2, "view", t0), (2, "click", t0 + m),
+            (2, "purchase", None),
+            # NULL-ts later step never qualifies
+            (3, "view", t0), (3, "click", None), (3, "click", t0 + 2 * m),
+            (3, "purchase", t0 + 90 * m),
+            (4, "view", None), (4, "click", None),
+        ],
+        "repeated_step": [
+            (1, "view", t0), (1, "view", t0), (1, "purchase", t0 + m),
+            (2, "view", t0), (2, "view", t0 + m), (2, "purchase", t0 + 2 * m),
+            (3, "view", t0), (3, "view", t0 + 61 * m),
+            (3, "purchase", t0 + 62 * m),
+            # a NULL-ts step 1 anchors no repeat of itself
+            (4, "view", None), (4, "view", None),
+        ],
+        "equal_ts": [
+            (1, "view", t0), (1, "click", t0), (1, "purchase", t0 + m),
+            (2, "view", t0), (2, "click", t0 + m), (2, "purchase", t0 + m),
+            (3, "click", t0), (3, "view", t0), (3, "click", t0 + 60 * m),
+            (3, "purchase", t0 + 61 * m),
+        ],
+    }
+    queries = all_queries()
+    schema = T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("ts", T.TimestampNTZType()),
+    ])
+    want_schema = T.StructType([
+        T.StructField("step", T.IntegerType(), False),
+        T.StructField("event_type", T.StringType(), False),
+        T.StructField("users", T.LongType(), False),
+    ])
+    for name, rows in frames.items():
+        df = spark.createDataFrame(rows, schema)
+        con = duckdb.connect()
+        con.register(
+            "events",
+            pa.table({
+                "user_id": pa.array([r[0] for r in rows], pa.int64()),
+                "event_type": pa.array([r[1] for r in rows], pa.string()),
+                "ts": pa.array([r[2] for r in rows], pa.timestamp("us")),
+            }),
+        )
+        # the repeated-step frame runs the funnel view -> view -> purchase
+        steps = ["view", "view" if name == "repeated_step" else "click", "purchase"]
+        for within in (None, 60):
+            sql = (
+                queries["e02_funnel"].oracle_text()
+                if within is None
+                else queries["e02b_funnel_within_window"].oracle_text().replace(
+                    "interval 1440 minute", f"interval {within} minute"
+                )
+            ).replace("'click'", f"'{steps[1]}'")
+            want = sorted(con.execute(sql).fetchall())
+            out = funnel(df, steps, within_minutes=within)
+            assert out.schema == want_schema, (name, within)
+            got = sorted(map(tuple, out.collect()))
+            assert got == want, (name, within, got, want)
+        con.close()
 
 
 def test_rfm_profiles_handcomputed(spark):

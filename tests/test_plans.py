@@ -423,14 +423,19 @@ def test_sessionize_single_shuffle(spark):
 
 
 def test_funnel_no_fact_self_join(spark):
+    """One scan of events, the user-key exchange plus the global count's
+    exchange, and no join of any kind — with and without the window."""
     from basis_devkit_spark.operators.events import funnel
 
-    df = funnel(load(spark, SF, "events"), ["view", "click", "purchase"])
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # later steps join fact x user-frame via broadcast hash joins
-    assert "BroadcastHashJoin" in plan
+    ev = load(spark, SF, "events")
+    for within in (None, 1440):
+        df = funnel(ev, ["view", "click", "purchase"], within_minutes=within)
+        plan = plan_of(df)
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+        assert len(scans) == 1 and "events.parquet" in scans[0]
+        assert plan.count("Exchange") <= 2
+        assert "Join" not in plan and "CartesianProduct" not in plan
+        assert "pythonUDF" not in plan and "EvalPython" not in plan
 
 
 def test_tpch_q6_predicates_push_to_scan(spark):

@@ -1263,6 +1263,57 @@ def test_compact_splits_hot_partition_and_caps_file_size(spark, tmp_path):
         assert pq.ParquetFile(f).metadata.num_rows <= 100
 
 
+def test_concurrent_compactions_keep_their_own_file_caps(spark, tmp_path):
+    """compact()'s file cap is a per-write option: two partitioned stores
+    compacted at once on two threads each keep their own cap, and the
+    session's maxRecordsPerFile is unchanged afterwards."""
+    import glob
+    import threading
+
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    before = spark.conf.get(key, None)
+    caps = {"a": 50, "b": 200}
+    stores = {}
+    for name in caps:
+        st = TableStore(str(tmp_path), name, spark)
+        st.configure(partition_by=["p"])
+        st.write_replace(
+            spark.createDataFrame(
+                [(i, f"p{i % 2}") for i in range(1000)], "k int, p string"
+            )
+        )
+        stores[name] = st
+    barrier = threading.Barrier(len(stores))
+    errors = []
+
+    def run(name):
+        try:
+            for _ in range(3):
+                barrier.wait(timeout=120)
+                stores[name].compact(max_records_per_file=caps[name])
+        except Exception as e:  # reported by the main thread below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in stores]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert spark.conf.get(key, None) == before
+    for name, st in stores.items():
+        vdir = st.version_path(st.get_active_version())
+        rows = [
+            pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(vdir, "p=*", "*.parquet"))
+        ]
+        assert sum(rows) == 1000, (name, rows)
+        assert max(rows) <= caps[name], (name, rows)
+
+
 def test_stats_drift_between_versions(spark, tmp_path):
     """Corpus-governance drift report: row counts, per-column nulls /
     typed min / max / exact distinct across two versions, schema rows
