@@ -29,6 +29,7 @@ import runpy
 import threading
 import time
 from collections import defaultdict, deque
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from datetime import datetime
 from typing import Any, Callable
 
@@ -84,6 +85,7 @@ class Engine:
         # HTTP request/response bridge: responses posted by node code via
         # respond_to_request, consumed by the webhook HTTP server.
         self._request_responses: dict[str, Any] = {}
+        self._responses_lock = threading.Lock()
 
     # ---------------- graph ----------------
     def load_graph(self, path: str) -> GraphSpec:
@@ -329,14 +331,16 @@ class Engine:
     # ---------------- webhooks (A22) ----------------
     def webhook_receive(self, webhook_name: str, payload: dict | list[dict]) -> None:
         """HTTP-ingest equivalent: append payload record(s) to the webhook's
-        auto-created output table (`create.py:177-197`)."""
+        auto-created output table (`create.py:177-197`), then one
+        ``_dataflow`` run downstream: each node with a signalled input runs
+        once, after all of its producers; re-runs honour request_new_run."""
         import pandas as pd
 
         records = payload if isinstance(payload, list) else [payload]
         store = self.store(webhook_name)
         df = self.spark.createDataFrame(pd.DataFrame.from_records(records))
         store.append(df)
-        self._propagate_from_stores({webhook_name})
+        self._dataflow(set(), {webhook_name})
 
     def respond_to_request(self, request_key: str, payload: Any) -> None:
         """Answer a waiting webhook request (node.py:544-553): the payload
@@ -346,41 +350,22 @@ class Engine:
         self._run_log.append(
             {"respond_to_request": request_key, "payload_type": type(payload).__name__}
         )
-        self._request_responses[request_key] = payload
         # Bound the buffer: responses are popped only by waiting HTTP
         # requests, so unconsumed ones (fire-and-forget posts) would
         # accumulate for the process lifetime. FIFO-evict beyond a cap.
-        while len(self._request_responses) > 1000:
-            self._request_responses.pop(next(iter(self._request_responses)))
+        # Locked: concurrent nodes respond from their worker threads.
+        with self._responses_lock:
+            self._request_responses[request_key] = payload
+            while len(self._request_responses) > 1000:
+                self._request_responses.pop(next(iter(self._request_responses)))
 
     def take_request_response(self, request_key: str) -> Any | None:
         """Pop the response recorded for ``request_key`` (webhook server
         hook); None if no node responded during propagation."""
-        return self._request_responses.pop(request_key, None)
+        with self._responses_lock:
+            return self._request_responses.pop(request_key, None)
 
-    # ---------------- DAG scheduling (A10, A23) ----------------
-    def _downstream_of(self, stores: set[str]) -> list[NodeSpec]:
-        assert self.graph is not None
-        return [
-            n
-            for n in self.graph.functions
-            if any(s in stores for s in n.inputs.values())
-        ]
-
-    def _propagate_from_stores(self, dirty: set[str], max_waves: int = 100) -> None:
-        """Signal propagation: updated stores enqueue consumer nodes, to
-        fixpoint (node.py:387-397 semantics)."""
-        waves = 0
-        while dirty and waves < max_waves:
-            waves += 1
-            next_dirty: set[str] = set()
-            for n in self._downstream_of(dirty):
-                ctx = self.run_node(n)
-                for store_name, sigs in ctx.signals.items():
-                    if sigs:
-                        next_dirty.add(store_name)
-            dirty = next_dirty
-
+    # ---------------- DAG scheduling (A10, A19, A23) ----------------
     def _store_edges(
         self,
     ) -> tuple[dict[str, NodeSpec], dict[str, int], dict[str, list[NodeSpec]]]:
@@ -447,39 +432,36 @@ class Engine:
                     levels.append([n])
         return levels
 
-    def run_graph(
-        self, max_reruns: int = 10, parallelism: int | None = None
-    ) -> list[dict[str, Any]]:
-        """One full batch pass: every node once, honoring request_new_run
-        re-enqueues (bounded, run after the pass in request order).
+    def _dataflow(
+        self,
+        roots: set[str] | None,
+        signalled: set[str],
+        max_reruns: int = 10,
+        parallelism: int | None = None,
+    ) -> None:
+        """The one scheduler, behind ``run_graph``, ``webhook_receive``,
+        ``trigger`` and ``tick``. ``roots=None`` is a full pass: every
+        non-webhook node runs, except fit nodes whose artifacts are built.
+        Otherwise only the ``roots`` (node ids) and what is downstream of
+        them or of the ``signalled`` stores: a root always runs, any other
+        node only if an input was signalled by the seed or by a node that
+        finished before it (node.py:387-397).
 
-        Dataflow scheduling (Dryad-style): a node is submitted as soon as
-        every node before it in ``topo_order()`` that CONFLICTS with it
-        has finished — two nodes conflict when they share a store and at
-        least one of them writes it. That one rule orders producers before
-        consumers, serializes writers of the same store (manifest commits
-        are per-store read-modify-write) and keeps a cycle's read/write
-        order, so any graph whose nodes declare their I/O gets the result
-        of the sequential run. Up to ``parallelism`` nodes run at once on
-        driver threads (default: the session's ``defaultParallelism``;
-        ``1`` runs one node at a time); their Spark jobs share the
-        executors (Spark's scheduler is thread-safe; FAIR pools apply if
-        configured).
-
-        On the first node failure no further node is submitted; the nodes
-        already running finish (their commits stand) and the error is
-        re-raised.
-
-        Concurrency safety: SQL nodes and ``@node``/class-style Python
-        nodes that touch stores only through their declared ports are
-        safe. NOT ordered: writes to stores a node does not declare (e.g.
-        a ``Table`` whose port name matches a store by the port-name
-        fallback of ``ExecutionContext.register_table``, or a component
-        writing through the engine API), and Python state a node shares
-        outside the engine (module globals, files). Declare such I/O in
-        ``graph.yml`` or pass ``parallelism=1``."""
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
+        A node is submitted once every earlier node in ``topo_order()``
+        that CONFLICTS with it (shares a store, one of them writing it)
+        has finished. That one rule runs a consumer once, after all of its
+        producers, serializes writers of a store (manifest commits are
+        read-modify-write) and keeps a cycle's read/write order, so a graph
+        whose nodes declare their I/O gets the result of a sequential run.
+        NOT ordered: writes to undeclared stores (a ``Table`` bound by the
+        port-name fallback of ``ExecutionContext.register_table``, a
+        component writing through the engine API) and state shared outside
+        the engine (module globals, files) — declare such I/O in
+        ``graph.yml`` (``run_graph`` also takes ``parallelism=1``). Up to
+        ``parallelism`` nodes (default: ``defaultParallelism``) run at once
+        on driver threads. ``request_new_run`` re-runs follow the pass, at
+        most ``max_reruns`` per node. The first node failure stops new
+        submissions; running nodes finish (commits stand), then it raises."""
         assert self.graph is not None, "load_graph first"
         sc = self.spark.sparkContext
         if parallelism is None:
@@ -501,7 +483,9 @@ class Engine:
                 reruns[node.id] += 1
                 rerun_queue.append(node)
 
-        def _skip_built_fit(node: NodeSpec) -> bool:
+        def _skip(node: NodeSpec) -> bool:
+            if roots is not None:
+                return node.id not in roots and signalled.isdisjoint(node.inputs.values())
             # build-once artifact producer with all artifacts present:
             # skipped — the refit-free run never rescans raw history.
             # Refit paths: explicit run_node()/trigger(), or a streaming
@@ -519,7 +503,15 @@ class Engine:
                 return True
             return False
 
-        order = [n for n in self.topo_order() if n.kind != "webhook"]
+        if roots is None:
+            order = [n for n in self.topo_order() if n.kind != "webhook"]
+        else:
+            # static reach: roots and readers of stores the seed reaches
+            order, reach = [], set(signalled)
+            for n in self.topo_order():
+                if n.id in roots or reach & set(n.inputs.values()):
+                    order.append(n)
+                    reach.update(n.outputs.values())
         io = [(set(n.inputs.values()), set(n.outputs.values())) for n in order]
         # each node with the earlier nodes it conflicts with
         waiting = [
@@ -539,7 +531,7 @@ class Engine:
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
             while True:
                 # submit ready nodes in topo order while workers are free;
-                # a skipped fit node finishes at once and may unblock more
+                # a skipped node finishes at once and may unblock more
                 i = 0
                 while error is None and i < len(waiting) and len(running) < parallelism:
                     node, deps = waiting[i]
@@ -547,7 +539,7 @@ class Engine:
                         i += 1
                         continue
                     del waiting[i]
-                    if _skip_built_fit(node):
+                    if _skip(node):
                         finished.add(node.id)
                     else:
                         running[pool.submit(_run, node)] = node
@@ -562,21 +554,29 @@ class Engine:
                         error = error or exc
                         continue
                     finished.add(node.id)
+                    signalled.update(s for s, sigs in ctx.signals.items() if sigs)
                     _after(node, ctx)
         if error is not None:
             raise error
         while rerun_queue:
             node = rerun_queue.popleft()
             _after(node, self.run_node(node))
+
+    def run_graph(
+        self, max_reruns: int = 10, parallelism: int | None = None
+    ) -> list[dict[str, Any]]:
+        """One full batch pass (``_dataflow``): every node once, up to
+        ``parallelism`` at a time (``1``: one by one), plus at most
+        ``max_reruns`` request_new_run re-runs per node."""
+        self._dataflow(None, set(), max_reruns, parallelism)
         return self._run_log
 
     def trigger(self, node_key: str) -> None:
-        """Manual trigger (`patterns trigger` equivalent): run the node and
-        propagate signals downstream to fixpoint."""
-        node = self._node_by_id_or_name(node_key)
-        ctx = self.run_node(node)
-        dirty = {s for s, sigs in ctx.signals.items() if sigs}
-        self._propagate_from_stores(dirty)
+        """Manual trigger (`patterns trigger` equivalent): one dataflow run
+        rooted at the node, which always runs (a built fit node too); each
+        downstream node with a signalled input runs once, after all of its
+        producers; re-runs honour ``request_new_run``."""
+        self._dataflow({self._node_by_id_or_name(node_key).id}, set())
 
     def due_nodes(self, at: datetime) -> list[NodeSpec]:
         """Nodes whose cron `trigger:` matches the given minute (A23)."""
@@ -588,12 +588,11 @@ class Engine:
         ]
 
     def tick(self, at: datetime | None = None) -> list[str]:
-        """One scheduler tick: run all cron-due nodes + propagate."""
-        at = at or datetime.now()
-        ran = []
-        for n in self.due_nodes(at):
-            self.trigger(n.id)
-            ran.append(n.id)
+        """One scheduler tick: ONE dataflow run rooted at every cron-due
+        node, so a consumer shared by due nodes runs once, after all of
+        them; re-runs honour ``request_new_run``. Returns the due ids."""
+        ran = [n.id for n in self.due_nodes(at or datetime.now())]
+        self._dataflow(set(ran), set())
         return ran
 
     def run_scheduler(

@@ -37,26 +37,6 @@ from pyspark.sql import functions as F
 
 from .lineage import release_plan_blocks
 
-# Per-round inner-plan tap — measurement tooling only (plans/r15 round
-# evidence): iterative operators' declared queries return checkpoint
-# scans, so their interesting physical plans (the per-round lineage) are
-# transient. When a list is installed here, each round appends
-# ``(label, formatted_plan)`` for its pre-checkpoint frame. Never set on
-# query paths; zero cost when None.
-_ROUND_PLAN_TAP: list[tuple[str, str]] | None = None
-
-
-def _tap_plan(label: str, df: DataFrame) -> None:
-    if _ROUND_PLAN_TAP is None:
-        return
-    try:
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-    except Exception:  # pragma: no cover - older JVM surface
-        txt = df._jdf.queryExecution().toString()
-    _ROUND_PLAN_TAP.append((label, txt))
-
 
 def pagerank_fixed_point(
     edges: DataFrame,
@@ -174,7 +154,6 @@ def pagerank_fixed_point(
                 ).alias("__r"),
             )
         )
-        _tap_plan(f"pagerank_round{it}", ranks)
     # The last round's plan is still lazy: one final eager checkpoint
     # truncates lineage for the returned frame (same contract as before
     # — callers receive a checkpoint-backed node-sized relation).
@@ -569,13 +548,12 @@ def kcore_decompose(
     superseded-block release. All integers; deterministic under any
     partitioning.
 
-    Convergence: the h-index cascade length is a GRAPH property — the
-    r14 probe (tools/r14_probes.py kcore_rounds) measured a 1M-edge
-    power-law graph needing >100 rounds, with the frontier collapsing
-    78k → <300 within 30 rounds and the rest a long tail of
-    few-node rounds; at toy scale each tail round is one job-dispatch
-    floor, on a real cluster it is noise next to the early big-frontier
-    rounds. ``max_iters`` is a SAFETY RAIL, not a tuning knob — hitting
+    Convergence: the h-index cascade length is a GRAPH property — a
+    1M-edge power-law graph was measured needing >100 rounds, with the
+    frontier collapsing 78,588 → <300 within 30 rounds and the rest a
+    long tail of few-node rounds; at toy scale each tail round is one
+    job-dispatch floor, on a real cluster it is noise next to the early
+    big-frontier rounds. ``max_iters`` is a SAFETY RAIL, not a tuning knob — hitting
     it logs a warning and returns the (monotone upper-bound)
     in-progress cores rather than looping forever on adversarial
     graphs."""
@@ -676,7 +654,6 @@ def kcore_decompose(
             F.coalesce("__h", "__c").alias("__c"),
             F.col("__c").alias("__old"),
         )
-        _tap_plan("kcore_round", nxt)
         # lazy checkpoint: the convergence count below materializes it,
         # fusing checkpoint + count into one job per round
         ck = nxt.localCheckpoint(eager=False)

@@ -2755,8 +2755,8 @@ def kn_trigram_lm_score(
     type-sized grouping-sets agg deriving all six count tables.
     Measured at 10× documents with broadcast disabled (100 TB regime
     proxy): 112.6 MB shuffle write vs the r13 five-join shape's
-    170.6 MB, with the stream exchange count plan-gated at ≤2
-    (tools/r14_probes.py kn_shuffle). Per-doc sums are bit-identical
+    170.6 MB (1.51×), with the stream exchange count plan-gated at ≤2
+    (the five-join shape: 6). Per-doc sums are bit-identical
     to per-instance scoring because ``__lp`` is a deterministic
     integer per type. No windows, no UDFs, no collect. Docs with < 3
     tokens are excluded (no trigrams)."""

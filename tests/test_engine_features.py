@@ -1271,3 +1271,279 @@ def test_run_graph_failure_stops_submission_and_reraises(spark, tmp_path):
     assert [e["node"] for e in eng.run_log] == ["zz_indep"]
     assert not eng.store("after").has_active_version()
     assert sorted(r.n for r in eng.table_df("kept").collect()) == [10, 20]
+
+
+_DIAMOND_YML = """
+functions:
+  - webhook: hook
+  - uses: t/noop@v1
+    id: a
+    inputs: { src: hook }
+    outputs: { out: ta }
+  - uses: t/noop@v1
+    id: c
+    inputs: { x: ta, y: tb }
+    outputs: { out: tc }
+  - uses: t/noop@v1
+    id: b
+    inputs: { src: ta }
+    outputs: { out: tb }
+stores:
+  - table: ta
+  - table: tb
+  - table: tc
+"""
+
+
+@pytest.mark.parametrize("entry", ["webhook_receive", "trigger"])
+def test_signal_run_runs_consumer_once_after_all_producers(spark, tmp_path, entry):
+    """Diamond a -> b -> c plus a -> c: a signal-driven run (webhook
+    ingest or a manual trigger of a) runs c exactly once, after b — never
+    first against a stale tb and again once b commits."""
+    app = write_app(tmp_path / "app", _DIAMOND_YML)
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.register_component("t/noop@v1", lambda engine, node: None)
+    if entry == "webhook_receive":
+        eng.webhook_receive("hook", [{"x": 1}])
+    else:
+        eng.trigger("a")
+    ran = [e["node"] for e in eng.run_log]
+    assert sorted(ran) == ["a", "b", "c"]
+    assert ran.index("b") < ran.index("c")
+
+
+def test_webhook_consumer_request_new_run_processes_every_chunk(spark, tmp_path):
+    """A webhook-fed node that works in chunks via request_new_run gets
+    its re-runs inside the same webhook_receive (node.py:482-500)."""
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - webhook: hook
+          - node_file: chunker.py
+            id: chunknode
+            inputs:
+              src_t: hook
+            outputs:
+              dst_t: dst
+        stores:
+          - table: dst
+        """,
+        **{
+            "chunker.py": """
+            from basis_devkit_spark import Table, State
+            from pyspark.sql import functions as F
+
+            src = Table("src_t", "r")
+            dst = Table("dst_t", "w")
+            state = State()
+
+            done = state.get_value("offset", 0)
+            batch = src.read_dataframe().filter(
+                (F.col("x") >= done) & (F.col("x") < done + 2)
+            )
+            dst.append(batch)
+            state.set_value("offset", done + 2)
+            if done + 2 < 6:
+                state.request_new_run()
+            """,
+        },
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.webhook_receive("hook", [{"x": i} for i in range(6)])
+    assert sorted(r.x for r in eng.table_df("dst").collect()) == [0, 1, 2, 3, 4, 5]
+    assert [e["node"] for e in eng.run_log] == ["chunknode"] * 3
+
+
+def test_webhook_fan_out_overlaps_independent_consumers(spark, tmp_path):
+    """Two consumers of one webhook that share no other store run at the
+    same time: each sees the other start while it is still running."""
+    import threading
+
+    started = {"p": threading.Event(), "q": threading.Event()}
+    seen = {}
+
+    def consumer(me, other):
+        def run(engine, node):
+            started[me].set()
+            seen[me] = started[other].wait(10)
+
+        return run
+
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - webhook: hook
+          - uses: t/p@v1
+            id: p
+            inputs: { src: hook }
+            outputs: { out: tp }
+          - uses: t/q@v1
+            id: q
+            inputs: { src: hook }
+            outputs: { out: tq }
+        stores:
+          - table: tp
+          - table: tq
+        """,
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.register_component("t/p@v1", consumer("p", "q"))
+    eng.register_component("t/q@v1", consumer("q", "p"))
+    eng.webhook_receive("hook", [{"x": 1}])
+    assert seen == {"p": True, "q": True}
+
+
+def test_webhook_failure_stops_propagation_and_reraises(spark, tmp_path):
+    """A consumer raising during webhook propagation: webhook_receive
+    re-raises its error, the node downstream of it never runs, and the
+    commit of an independent consumer stands."""
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - webhook: hook
+          - node_file: boom.py
+            id: boom
+            inputs: { src: hook }
+            outputs: { out: broken }
+          - node_file: after.sql
+            id: downstream
+            inputs: { src: broken }
+            outputs: { out: after }
+          - node_file: indep.sql
+            id: zz_indep
+            inputs: { src: hook }
+            outputs: { out: kept }
+        stores:
+          - table: broken
+          - table: after
+          - table: kept
+        """,
+        **{
+            "boom.py": """
+            raise RuntimeError("node boom failed")
+            """,
+            "after.sql": "select * from {{ src }}",
+            "indep.sql": "select n * 10 as n from {{ src }}",
+        },
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    with pytest.raises(RuntimeError, match="node boom failed"):
+        eng.webhook_receive("hook", [{"n": 1}, {"n": 2}])
+    assert [e["node"] for e in eng.run_log] == ["zz_indep"]
+    assert not eng.store("after").has_active_version()
+    assert sorted(r.n for r in eng.table_df("kept").collect()) == [10, 20]
+
+
+def test_tick_runs_shared_consumer_of_due_nodes_once(spark, tmp_path):
+    """Two cron nodes due in the same minute feed one consumer: the tick
+    is one run, so the consumer runs once, after both."""
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - uses: t/noop@v1
+            id: cron1
+            trigger: '30 3 * * *'
+            outputs: { out: t1 }
+          - uses: t/noop@v1
+            id: cron2
+            trigger: '30 3 * * *'
+            outputs: { out: t2 }
+          - uses: t/noop@v1
+            id: both
+            inputs: { x: t1, y: t2 }
+            outputs: { out: t3 }
+        stores:
+          - table: t1
+          - table: t2
+          - table: t3
+        """,
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.register_component("t/noop@v1", lambda engine, node: None)
+    assert eng.tick(datetime(2026, 8, 13, 3, 30)) == ["cron1", "cron2"]
+    ran = [e["node"] for e in eng.run_log]
+    assert sorted(ran) == ["both", "cron1", "cron2"]
+    assert ran[-1] == "both"
+
+
+def test_webhook_skips_consumer_of_unsignalled_store(spark, tmp_path):
+    """A node whose producer committed no signal (declared its output
+    but wrote nothing) is not run by webhook propagation."""
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - webhook: hook
+          - node_file: quiet.py
+            id: quiet
+            inputs: { src_t: hook }
+            outputs: { dst_t: quiet_out }
+          - node_file: after.sql
+            id: after
+            inputs: { src: quiet_out }
+            outputs: { out: after_out }
+        stores:
+          - table: quiet_out
+          - table: after_out
+        """,
+        **{
+            "quiet.py": """
+            from basis_devkit_spark import Table
+
+            src = Table("src_t", "r")
+            dst = Table("dst_t", "w")
+            """,
+            "after.sql": "select * from {{ src }}",
+        },
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.webhook_receive("hook", [{"x": 1}])
+    assert [e["node"] for e in eng.run_log] == ["quiet"]
+    assert not eng.store("after_out").has_active_version()
+
+
+def test_respond_to_request_buffer_concurrent_eviction(spark, tmp_path):
+    """Node threads responding at once past the 1000-entry cap: the FIFO
+    eviction never races (no KeyError / dict-changed-size error) and the
+    buffer ends at the cap."""
+    import sys
+    import threading
+
+    eng = Engine(spark, str(tmp_path / "store"))
+    start = threading.Barrier(8, timeout=30)
+    errors = []
+
+    def respond(r, t):
+        start.wait()
+        try:
+            for i in range(2000):
+                eng.respond_to_request(f"req-{r}-{t}-{i}", {"i": i})
+        except Exception as exc:  # collected: a thread's error is not raised
+            errors.append(exc)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for r in range(3):
+            threads = [
+                threading.Thread(target=respond, args=(r, t)) for t in range(8)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(switch)
+    assert errors == []
+    assert len(eng._request_responses) == 1000

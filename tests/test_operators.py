@@ -2,6 +2,8 @@
 SimHash properties, as-of/range joins vs naive equivalents, text ops,
 multimodal plumbing, similarity metrics."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -3829,14 +3831,35 @@ def test_ivf_quantized_topk_plan_shape(spark, emb):
     assert "CartesianProduct" not in plan
 
 
-def _clustered_embeddings(spark):
-    """Planted-cluster fixture — IMPORTED from the probe so the pytest
-    recall floor and the OPERATORS_BENCH evidence are measured on the
-    byte-identical fixture (a drift in one would silently invalidate
-    the cross-reference)."""
-    from tools.r11_probes import clustered_embeddings
-
-    return clustered_embeddings(spark)
+def clustered_embeddings(
+    spark,
+    n: int = 2000,
+    dim: int = 64,
+    n_centers: int = 16,
+    noise: float = 0.25,
+    seed: int = 11,
+):
+    """Deterministic planted-cluster fixture: ``n_centers`` unit-ish
+    Gaussian centers, each row = center(i mod n_centers) + N(0, noise²)
+    per component. Intrinsic dimension ≈ n_centers ≪ dim — the manifold
+    shape JL preserves. float32 column like the shipped embeddings."""
+    rng = random.Random(seed)
+    centers = [
+        [rng.gauss(0, 1.0) for _ in range(dim)] for _ in range(n_centers)
+    ]
+    rows = [
+        (
+            i,
+            [
+                c + rng.gauss(0, noise)
+                for c in centers[i % n_centers]
+            ],
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).repartition(16)
 
 
 def test_jl_ivf_topk_recall_on_structured_fixture(spark):
@@ -3847,8 +3870,8 @@ def test_jl_ivf_topk_recall_on_structured_fixture(spark):
     refine=32) recovers >= 0.9 of the exact top-5 — measured 0.993,
     EQUAL to d20 (no JL) at the same refine while touching 4x fewer
     coarse bytes per row. The shipped random sf* vectors are the
-    documented JL worst case (probe: tools/r11_probes.py
-    jl_structured; guidance table in the operator docstring)."""
+    documented JL worst case (guidance table in the operator
+    docstring)."""
     from pyspark.sql import functions as F
 
     from basis_devkit_spark.operators.similarity import (
@@ -3856,7 +3879,7 @@ def test_jl_ivf_topk_recall_on_structured_fixture(spark):
         jl_ivf_quantized_topk,
     )
 
-    emb = _clustered_embeddings(spark).persist()
+    emb = clustered_embeddings(spark).persist()
     q = emb.filter(F.col("vec_id") < 30)
     exact = {
         (r["query_id"], r["match_id"])
