@@ -41,15 +41,13 @@ class Stream:
         """Unconsumed records as a lazy DataFrame, ordered. The filter is
         strictly-greater-than (seek semantics node.py:74-75) and pushes down
         to the parquet scan."""
-        if self._position is not None and hasattr(self.table, "read_where"):
+        if self._position is None:
+            df = self.table.read_dataframe()
+        else:
             # File-skipping read: footer min/max stats on the ordering
             # field drop already-consumed files entirely (the filter is
             # also applied and still pushes down into surviving scans).
             df = self.table.read_where([(self.order_by, ">", self._position)])
-        else:
-            df = self.table.read_dataframe()
-            if self._position is not None:
-                df = df.filter(F.col(self.order_by) > F.lit(self._position))
         return df.orderBy(self.order_by)
 
     def consume_records(self, with_metadata: bool = False) -> Iterator[dict]:
@@ -86,10 +84,8 @@ class Stream:
     def checkpoint(self) -> None:
         """Persist consumption progress now (node.py:54-58)."""
         self._committed = self._position
-        state = _node_state(self.table)
-        if state is not None:
-            state[self._cursor_key] = _to_jsonable(self._committed)
-            _persist_state(self.table)
+        _node_state(self.table)[self._cursor_key] = _to_jsonable(self._committed)
+        _persist_state(self.table)
 
     def rollback(self) -> None:
         """Roll back to last checkpoint (node.py:60-63)."""
@@ -109,15 +105,14 @@ class Stream:
         self.checkpoint()
 
 
-def _node_state(table: "Table") -> dict | None:
-    ctx = getattr(table, "_exec_ctx", None)
-    return ctx.state_dict if ctx is not None else getattr(table, "_stream_state", None)
+def _node_state(table: "Table") -> dict:
+    ctx = table._exec_ctx
+    return ctx.state_dict if ctx is not None else table._stream_state
 
 
 def _persist_state(table: "Table") -> None:
-    ctx = getattr(table, "_exec_ctx", None)
-    if ctx is not None:
-        ctx.persist_state()
+    if table._exec_ctx is not None:
+        table._exec_ctx.persist_state()
 
 
 def _to_jsonable(v: Any) -> Any:

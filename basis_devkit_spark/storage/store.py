@@ -18,6 +18,15 @@ Commit protocol (crash-safe, scale-safe):
   2. write manifest to a temp file, ``os.replace`` over _manifest.json
      (atomic on POSIX) — the pointer flip is the commit.
 
+A mutation either flips the pointer or leaves the handle at its last
+committed manifest: every mutating method runs under one guard
+(``_mutation``) that, when the method raises, puts back the manifest this
+handle last loaded or committed — no allocated version entry, config
+change, monotonic-id advance or stream batch id of the failed call
+survives to be persisted by a later commit. Every data write commits
+through one helper (``_write_version``); a failed write's version number
+is reused by the next one, which overwrites the orphan directory.
+
 A version is a *lineage*: an ordered list of immutable directories
 (manifest ``dirs``). ``append`` writes only the incoming batch into a new
 directory and commits a new version whose lineage = previous dirs + the
@@ -50,6 +59,7 @@ Delta's deps.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
@@ -78,8 +88,24 @@ class SchemaMismatchError(ValueError):
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed this store since this handle loaded its
     manifest — committing would silently drop their version (lost
-    update). Call ``refresh()`` and re-derive the write, or serialize
-    writers (the engine does: one cached handle per store)."""
+    update). Raised when a version is allocated or at the pointer flip;
+    either way the handle keeps its last committed manifest and stays
+    stale, so every later commit raises too, until ``refresh()``.
+    Then re-derive the write, or serialize writers (the engine does: one
+    cached handle per store)."""
+
+
+def _mutation(fn):
+    """Run a mutating ``TableStore`` method under its handle's guard
+    (``TableStore._guard``)."""
+
+    @functools.wraps(fn)
+    def guarded(self, *args, **kwargs):
+        with self._guard():
+            return fn(self, *args, **kwargs)
+
+    return guarded
+
 
 # CommonModel-ish type names → Spark types (SURVEY §1.2 mapping).
 FIELD_TYPE_MAP: dict[str, T.DataType] = {
@@ -230,34 +256,31 @@ class TableStore:
         # whole computation — serializing concurrent nodes.
         if spark.conf.get(_TS_TYPE_KEY) != "TIMESTAMP_MICROS":
             spark.conf.set(_TS_TYPE_KEY, "TIMESTAMP_MICROS")
-        self._manifest = self._load_manifest()
-        self._loaded_seq = self._manifest.commit_seq
         # Batches pinned (persisted) during a write so the id-assignment
         # count job and the write job see identical partitions.
         self._pinned: list[DataFrame] = []
-        # Violation counts from the most recent _write_counted call.
-        self._last_violations: dict[str, int] = {}
+        self.refresh()
 
     # ---------------- manifest ----------------
     def _manifest_path(self) -> str:
         return os.path.join(self.path, MANIFEST)
 
     def _load_manifest(self) -> _Manifest:
+        """The on-disk manifest. Its text is kept as the committed
+        snapshot a failed mutation rolls back to."""
         p = self._manifest_path()
+        self._committed: str | None = None
         if os.path.exists(p):
             with open(p) as f:
-                return _Manifest.from_json(json.load(f))
-        return _Manifest(name=self.name)
+                self._committed = f.read()
+        return self._committed_manifest()
 
-    def _disk_commit_seq(self) -> int:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return 0
-        try:
-            with open(p) as f:
-                return int(json.load(f).get("commit_seq", 0))
-        except (OSError, ValueError):
-            return 0
+    def _committed_manifest(self) -> _Manifest:
+        """A fresh copy of the manifest this handle last loaded or
+        committed."""
+        if self._committed is None:
+            return _Manifest(name=self.name)
+        return _Manifest.from_json(json.loads(self._committed))
 
     def refresh(self) -> None:
         """Reload the manifest from disk (picks up another writer's
@@ -265,27 +288,57 @@ class TableStore:
         self._manifest = self._load_manifest()
         self._loaded_seq = self._manifest.commit_seq
 
-    def _commit_manifest(self) -> None:
-        # Optimistic concurrency check-and-swap: the commit is only valid
-        # if nobody else committed since this handle's manifest load. The
-        # check+flip is not itself atomic across processes (no file lock),
-        # but it converts the silent lost-update of two interleaved
-        # same-process handles — the realistic hazard — into a hard error.
-        disk_seq = self._disk_commit_seq()
-        if disk_seq != self._loaded_seq:
+    @contextlib.contextmanager
+    def _guard(self):
+        """The one failure rule for every mutating method: if the body
+        raises, the in-memory manifest goes back to the one this handle
+        last loaded or committed — an allocated version entry, a config
+        change, a monotonic-id advance or a stamped stream batch id of the
+        failed call never reaches a later commit. Pinned batches are
+        released either way. Nesting is harmless: an inner guard rolls
+        back to the same snapshot, and a commit an inner call made is
+        already that snapshot."""
+        try:
+            yield
+        except BaseException:
+            self._manifest = self._committed_manifest()
+            raise
+        finally:
+            self._release()
+
+    def _check_fence(self) -> None:
+        """Optimistic-concurrency fence: this handle may only write if the
+        on-disk manifest still carries the ``commit_seq`` it loaded or
+        last committed. Not atomic across processes (no file lock), but it
+        turns the silent lost update of two interleaved handles — the
+        realistic hazard — into a hard error."""
+        seq = 0
+        try:
+            with open(self._manifest_path()) as f:
+                seq = int(json.load(f).get("commit_seq", 0))
+        except (OSError, ValueError):
+            pass
+        if seq != self._loaded_seq:
             raise ConcurrentWriteError(
                 f"store '{self.name}': manifest commit_seq moved "
-                f"{self._loaded_seq} -> {disk_seq} under this handle; "
+                f"{self._loaded_seq} -> {seq} under this handle; "
                 "another writer committed. refresh() and retry."
             )
+
+    def _commit_manifest(self) -> None:
+        # Check-and-swap: the commit is only valid if nobody else
+        # committed since this handle's manifest load.
+        self._check_fence()
         self._manifest.commit_seq = self._loaded_seq + 1
+        text = json.dumps(self._manifest.to_json(), indent=1)
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(self._manifest.to_json(), f, indent=1)
+            f.write(text)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path())  # atomic pointer flip
         self._loaded_seq = self._manifest.commit_seq
+        self._committed = text
 
     # ---------------- versions (A9) ----------------
     def version_path(self, version: int) -> str:
@@ -296,13 +349,7 @@ class TableStore:
         # number another writer already used — its data write would land
         # in (and clobber) their directory before the commit-time check
         # ever runs. Fail before touching disk.
-        disk_seq = self._disk_commit_seq()
-        if disk_seq != self._loaded_seq:
-            raise ConcurrentWriteError(
-                f"store '{self.name}': manifest commit_seq moved "
-                f"{self._loaded_seq} -> {disk_seq} under this handle; "
-                "another writer committed. refresh() and retry."
-            )
+        self._check_fence()
         v = self._manifest.next_version
         self._manifest.next_version += 1
         self._manifest.versions[str(v)] = {"version": v, "created_at": time.time()}
@@ -328,37 +375,23 @@ class TableStore:
             os.path.isdir(os.path.join(self.path, d)) for d in dirs
         )
 
+    @_mutation
     def set_active_version(self, version: int, record_count: int | None = None) -> None:
-        # Restore-on-raise: if the durable commit fails, the in-memory
-        # pointer must NOT keep pointing at the uncommitted version —
-        # this handle's reads would see data the disk never committed,
-        # and a later unrelated commit would silently persist the failed
-        # operation's pointer (same hazard class as stamping a stream
-        # batch id before its commit).
+        """Flip the pointer to ``version`` — the commit. If the durable
+        commit fails, the guard drops the pointer AND the version entry
+        ``create_new_version`` registered, so neither this handle's reads
+        nor a later commit ever see a version that was never committed."""
         self._manifest.active_version = version
         if record_count is not None:
             self._manifest.versions.setdefault(str(version), {})["record_count"] = record_count
-        try:
-            self._commit_manifest()
-        except BaseException:
-            # Full in-memory rollback to committed truth: restoring just
-            # the pointer would leave the version entry registered by
-            # create_new_version in self._manifest.versions, and the next
-            # successful commit would persist it — read_at()/history()
-            # would then surface a version that was never the table's
-            # committed state.
-            self.refresh()
-            raise
+        self._commit_manifest()
 
+    @_mutation
     def reset(self) -> None:
         """Point at a fresh null version; old data kept for retention GC
         (`node.py:399-405`)."""
         self._manifest.active_version = None
-        try:
-            self._commit_manifest()
-        except BaseException:
-            self.refresh()  # full rollback to committed truth (see above)
-            raise
+        self._commit_manifest()
 
     def history(self) -> list[dict]:
         """Version history, newest first (the DESCRIBE HISTORY analogue):
@@ -387,6 +420,7 @@ class TableStore:
             )
         return out
 
+    @_mutation
     def vacuum(self, keep_last: int = 2) -> None:
         """Retention GC: drop all but the newest ``keep_last`` versions
         (never the active one). A directory is deleted only if NO retained
@@ -456,6 +490,7 @@ class TableStore:
         return self.version_schema(self._manifest.active_version)
 
     # ---------------- init config (node.py:269-297) ----------------
+    @_mutation
     def configure(
         self,
         schema_hints: dict[str, str] | None = None,
@@ -562,9 +597,6 @@ class TableStore:
         (pre-lineage manifests) default to the version's own directory."""
         entry = self._manifest.versions.get(str(version), {})
         return list(entry.get("dirs") or [f"v={version}"])
-
-    def _set_version_dirs(self, version: int, dirs: list[str]) -> None:
-        self._manifest.versions.setdefault(str(version), {})["dirs"] = list(dirs)
 
     def version_schema(self, version: int) -> T.StructType:
         """The schema ``read_version(version)`` returns: the version's
@@ -809,12 +841,18 @@ class TableStore:
         # survives select/filter/rename as long as any original column
         # does — downstream a filter can only shrink the frame, so the
         # metadata value is a correct UPPER BOUND for join sizing.
+        # One projection stamps every column (a withMetadata per column
+        # would build and analyse a new Dataset each time).
         rc = self.record_count
         if rc is not None:
-            for f in df.schema.fields:
-                df = df.withMetadata(
-                    f.name, {**f.metadata, "bds_record_count": int(rc)}
-                )
+            df = df.select(
+                *[
+                    F.col(f.name).alias(
+                        f.name, metadata={**f.metadata, "bds_record_count": int(rc)}
+                    )
+                    for f in df.schema.fields
+                ]
+            )
             df._bds_row_count = rc  # type: ignore[attr-defined]
         return df
 
@@ -831,6 +869,7 @@ class TableStore:
             )
         return self._read_lineage(version)
 
+    @_mutation
     def restore(self, version: int) -> int:
         """Delta-style RESTORE TABLE: make an old version's contents the
         new ACTIVE version as a fresh commit — no data copy, the new
@@ -841,11 +880,11 @@ class TableStore:
             raise FileNotFoundError(
                 f"table '{self.name}' has no version {version} (vacuumed?)"
             )
-        dirs = list(self._version_dirs(version))
+        dirs = self._version_dirs(version)
         info = self._manifest.versions[str(version)]
         v = self.create_new_version()
-        self._set_version_dirs(v, dirs)
         entry = self._manifest.versions[str(v)]
+        entry["dirs"] = dirs
         entry["restored_from"] = version
         if info.get("schema_json"):
             entry["schema_json"] = info["schema_json"]
@@ -887,33 +926,34 @@ class TableStore:
         rel_dirs = self._version_dirs(v)
         abs_dirs = [os.path.join(self.path, d) for d in rel_dirs]
         info = self._manifest.versions[str(v)]
-        tv = target.create_new_version()
-        target._set_version_dirs(tv, abs_dirs)
-        entry = target._manifest.versions[str(tv)]
-        if info.get("schema_json"):
-            entry["schema_json"] = info["schema_json"]
-        entry["cloned_from"] = {
-            "table": self.name,
-            "path": self.path,
-            "version": v,
-        }
-        for rel, ab in zip(rel_dirs, abs_dirs):
-            stats = self._manifest.dir_stats.get(rel)
-            if stats:
-                # re-key per-file entries: stats files are recorded
-                # relative to the OWNING table's path; the clone's
-                # prune_files lists them relative to ITS path
-                target._manifest.dir_stats[ab] = {
-                    os.path.relpath(
-                        os.path.join(self.path, f), target.path
-                    ): v2
-                    for f, v2 in stats.items()
-                }
-        if self._manifest.partition_by and not target._manifest.partition_by:
-            target._manifest.partition_by = list(self._manifest.partition_by)
-        if self._manifest.stats_columns and not target._manifest.stats_columns:
-            target._manifest.stats_columns = list(self._manifest.stats_columns)
-        target.set_active_version(tv, record_count=info.get("record_count"))
+        with target._guard():
+            tv = target.create_new_version()
+            entry = target._manifest.versions[str(tv)]
+            entry["dirs"] = abs_dirs
+            if info.get("schema_json"):
+                entry["schema_json"] = info["schema_json"]
+            entry["cloned_from"] = {
+                "table": self.name,
+                "path": self.path,
+                "version": v,
+            }
+            for rel, ab in zip(rel_dirs, abs_dirs):
+                stats = self._manifest.dir_stats.get(rel)
+                if stats:
+                    # re-key per-file entries: stats files are recorded
+                    # relative to the OWNING table's path; the clone's
+                    # prune_files lists them relative to ITS path
+                    target._manifest.dir_stats[ab] = {
+                        os.path.relpath(
+                            os.path.join(self.path, f), target.path
+                        ): v2
+                        for f, v2 in stats.items()
+                    }
+            if self._manifest.partition_by and not target._manifest.partition_by:
+                target._manifest.partition_by = list(self._manifest.partition_by)
+            if self._manifest.stats_columns and not target._manifest.stats_columns:
+                target._manifest.stats_columns = list(self._manifest.stats_columns)
+            target.set_active_version(tv, record_count=info.get("record_count"))
         return tv
 
     def read_at(self, timestamp: float) -> DataFrame:
@@ -1031,7 +1071,11 @@ class TableStore:
             # range of the cluster key → footer stats prune hard. One
             # extra range shuffle per write; reads win it back every time.
             df = df.repartitionByRange(*cb).sortWithinPartitions(*cb)
-        w = df.write.mode(mode).options(**options)
+        # Static overwrite even if the session asks for dynamic: a version
+        # directory is always written whole, so nothing a failed write
+        # with the same (reused) version number left there survives.
+        w = df.write.mode(mode).option("partitionOverwriteMode", "static")
+        w = w.options(**options)
         if self._manifest.partition_by:
             w = w.partitionBy(*self._manifest.partition_by)
         bb = self._manifest.bucket_by
@@ -1055,10 +1099,13 @@ class TableStore:
             return
         w.parquet(path)
 
-    def _write_counted(self, df: DataFrame, path: str, **options) -> int:
-        """Overwrite-write ``df`` to ``path`` and return its row count,
-        captured via ``df.observe`` DURING the write job — one pass, never
-        a re-read of the written output (which doubles I/O at scale).
+    def _write_counted(
+        self, df: DataFrame, path: str, **options
+    ) -> tuple[int, dict[str, int]]:
+        """Overwrite-write ``df`` to ``path`` and return its row count and
+        per-expectation violation counts, captured via ``df.observe``
+        DURING the write job — one pass, never a re-read of the written
+        output (which doubles I/O at scale).
 
         Expectations ride the same observation: per-constraint violation
         counts are aggregated during the write (zero extra scans at any
@@ -1094,24 +1141,44 @@ class TableStore:
         self._write(df, path, "overwrite", **options)
         self._collect_file_stats(os.path.relpath(path, self.path))
         got = obs.get
-        self._last_violations = {
-            name: int(got[f"__exp_{name}"]) for name in exps
-        }
-        bad = {k: v for k, v in self._last_violations.items() if v}
+        violations = {name: int(got[f"__exp_{name}"]) for name in exps}
+        bad = {k: v for k, v in violations.items() if v}
         if bad and m.expectations_mode == "fail":
             raise ValueError(
                 f"table '{self.name}': expectation(s) violated, batch "
                 f"rejected (pointer not flipped): {bad}"
             )
-        return int(got["__kept"]) if drop else int(got["n"])
+        return int(got["__kept"]) if drop else int(got["n"]), violations
 
-    def _record_violations(self, v: int) -> None:
-        """Persist the write's per-expectation violation counts on the
-        version entry (data-quality audit trail, O(1) metadata)."""
+    def _write_version(
+        self,
+        df: DataFrame,
+        lineage: list[str] | None = None,
+        carried: int | None = 0,
+        **options,
+    ) -> tuple[int, int]:
+        """The one data-write commit, run inside a guarded verb: allocate a
+        version, write ``df`` as its own directory (counted, expectations
+        observed), put the lineage (``lineage`` + that directory), the
+        schema and the violation counts on its entry, and flip the pointer
+        through ``set_active_version``. ``carried`` is the row count the
+        ``lineage`` prefix brings along (None: unknown, so the version's
+        count is unknown too); ``options`` are writer options for this
+        write only. Returns (version, rows written)."""
+        v = self.create_new_version()
+        n, violations = self._write_counted(df, self.version_path(v), **options)
+        entry = self._manifest.versions[str(v)]
+        entry["dirs"] = [*(lineage or []), f"v={v}"]
+        # The version's schema (incl. partition and decoration columns);
+        # every read opens its lineage with it (see ``version_schema``).
+        entry["schema_json"] = df.schema.json()
         if self._manifest.expectations:
-            self._manifest.versions.setdefault(str(v), {})[
-                "expectation_violations"
-            ] = dict(self._last_violations)
+            # data-quality audit trail, O(1) metadata
+            entry["expectation_violations"] = violations
+        self.set_active_version(
+            v, record_count=None if carried is None else carried + n
+        )
+        return v, n
 
     def expectation_violations(self, version: int | None = None) -> dict[str, int]:
         """Violation counts recorded for ``version`` (default: active)."""
@@ -1121,12 +1188,6 @@ class TableStore:
                 "expectation_violations", {}
             )
         )
-
-    def _record_schema(self, v: int, df: DataFrame) -> None:
-        """Record the version's schema (incl. partition and decoration
-        columns) in the manifest; every read of the version opens its
-        lineage with it (in read form, see ``version_schema``)."""
-        self._manifest.versions.setdefault(str(v), {})["schema_json"] = df.schema.json()
 
     def _check_strict_schema(self, df: DataFrame, target: T.StructType) -> None:
         if not self._manifest.strict_schema:
@@ -1141,58 +1202,35 @@ class TableStore:
                 f"match the declared schema; extra={extra} missing={missing}"
             )
 
-    def _commit_single_dir_version(self, df: DataFrame, **options) -> tuple[int, int]:
-        """Write ``df`` as a fresh one-directory version; returns (v, n).
-        ``options`` are writer options for this write only. Does NOT flip
-        the active pointer — callers commit."""
-        v = self.create_new_version()
-        n = self._write_counted(df, self.version_path(v), **options)
-        self._set_version_dirs(v, [f"v={v}"])
-        self._record_schema(v, df)
-        self._record_violations(v)
-        return v, n
-
+    @_mutation
     def write_replace(self, df: DataFrame) -> int:
         """New version containing exactly these rows (A6 replace)."""
-        try:
-            df = self._decorate(df)
-            v, n = self._commit_single_dir_version(df)
-            self.set_active_version(v, record_count=n)
-            return v
-        finally:
-            self._release()
+        return self._write_version(self._decorate(df))[0]
 
+    @_mutation
     def append(self, df: DataFrame) -> None:
         """Append rows (A4). Copy-on-write: the batch lands in a NEW
         directory and the new version's lineage = previous dirs + it, so no
         committed version directory is ever mutated. A crash mid-write
         leaves an unreferenced directory — readers and time travel are
         unaffected until the manifest pointer flips."""
-        try:
-            df = self._decorate(df)
-            if not self.has_active_version():
-                v, n = self._commit_single_dir_version(df)
-                self.set_active_version(v, record_count=n)
-                return
-            prev = self._manifest.active_version
-            existing = self.version_schema(prev)
-            self._check_strict_schema(df, existing)
-            df = _align_columns(df, existing)
-            prev_dirs = self._version_dirs(prev)
-            prev_count = self._manifest.versions.get(str(prev), {}).get("record_count")
-            v = self.create_new_version()
-            n_new = self._write_counted(df, self.version_path(v))
-            self._set_version_dirs(v, prev_dirs + [f"v={v}"])
-            self._record_schema(v, df)
-            self._record_violations(v)
-            total = (prev_count + n_new) if prev_count is not None else None
-            self.set_active_version(v, record_count=total)
-            ca = self._manifest.compact_after
-            if ca is not None and len(self._version_dirs(v)) > ca:
-                self.compact()
-        finally:
-            self._release()
+        df = self._decorate(df)
+        if not self.has_active_version():
+            self._write_version(df)
+            return
+        prev = self._manifest.active_version
+        existing = self.version_schema(prev)
+        self._check_strict_schema(df, existing)
+        v, _ = self._write_version(
+            _align_columns(df, existing),
+            lineage=self._version_dirs(prev),
+            carried=self._manifest.versions[str(prev)].get("record_count"),
+        )
+        ca = self._manifest.compact_after
+        if ca is not None and len(self._version_dirs(v)) > ca:
+            self.compact()
 
+    @_mutation
     def append_stream_batch(self, df: DataFrame, batch_id: int) -> bool:
         """Idempotent micro-batch append for Structured Streaming
         ``foreachBatch`` sinks: a batch id at or below the last committed
@@ -1201,52 +1239,32 @@ class TableStore:
         data and progress can never disagree (exactly-once, the streaming
         analogue of the stream-cursor commit order in engine/context.py).
         Returns True when the batch was ingested."""
-        if batch_id <= self._manifest.last_stream_batch_id:
-            return False
-        prev_id = self._manifest.last_stream_batch_id
-        prev_version = self._manifest.active_version
-        self._manifest.last_stream_batch_id = batch_id
-        # append() commits the manifest (with the id above) atomically at
-        # its pointer flip; on a crash before that, the in-memory id is
-        # lost with the orphan write — replay then re-ingests. After it,
-        # replay is a no-op. Either way: exactly once.
-        try:
-            self.append(df)
-        except BaseException:
-            # append() raised (expectation failure, transient write error).
-            # If the pointer never flipped the batch was NOT ingested — the
-            # stamped id must not survive in memory, or a later unrelated
-            # commit would persist it and a retry of this batch would be
-            # silently skipped (data loss). If the pointer DID flip (e.g. a
-            # post-commit compact failed) the data and id are already
-            # durably committed together — keep the id so replay stays a
-            # no-op.
-            if self._manifest.active_version == prev_version:
-                self._manifest.last_stream_batch_id = prev_id
-            raise
-        return True
+        return self._stream_batch(self.append, df, batch_id)
 
+    @_mutation
     def upsert_stream_batch(self, df: DataFrame, batch_id: int) -> bool:
         """Idempotent micro-batch UPSERT for ``foreachBatch`` sinks — the
         update-mode analogue of ``append_stream_batch``: a streaming
         aggregation emits updated rows per key each micro-batch, and this
         merges them into the managed table on ``unique_on``. Same
-        exactly-once contract: the batch id rides the atomic manifest flip;
-        replays are skipped; a failed merge un-stamps the id unless the
-        pointer already flipped."""
+        exactly-once contract: the batch id rides the atomic manifest flip
+        and replays are skipped."""
+        return self._stream_batch(self.upsert, df, batch_id)
+
+    def _stream_batch(self, write, df: DataFrame, batch_id: int) -> bool:
+        """Skip a replayed batch id, else stamp the id and ``write`` the
+        batch: the write's pointer flip commits data and id together. If
+        the write raises before its flip, the guard drops the stamp with
+        the rest of the uncommitted state, so a retry of this batch is
+        ingested, not skipped; a failure after the flip (a post-commit
+        compaction) keeps it, so replay stays a no-op."""
         if batch_id <= self._manifest.last_stream_batch_id:
             return False
-        prev_id = self._manifest.last_stream_batch_id
-        prev_version = self._manifest.active_version
         self._manifest.last_stream_batch_id = batch_id
-        try:
-            self.upsert(df)
-        except BaseException:
-            if self._manifest.active_version == prev_version:
-                self._manifest.last_stream_batch_id = prev_id
-            raise
+        write(df)
         return True
 
+    @_mutation
     def compact(self, max_records_per_file: int = 4_000_000) -> int:
         """Rewrite the active version's lineage into one directory (file-
         count hygiene after many appends). Same data, new version.
@@ -1298,16 +1316,14 @@ class TableStore:
                 )
             else:
                 df = df.repartition(*keys)
-        n0 = self.record_count
         cap = (
             {"maxRecordsPerFile": max_records_per_file}
             if max_records_per_file > 0
             else {}
         )
-        v, n = self._commit_single_dir_version(df, **cap)
-        self.set_active_version(v, record_count=n0 if n0 is not None else n)
-        return v
+        return self._write_version(df, **cap)[0]
 
+    @_mutation
     def delete_where(self, condition: str) -> int:
         """Managed DELETE (Delta DML parity): copy-on-write rewrite that
         drops rows matching the SQL ``condition``; commits as a new
@@ -1316,12 +1332,11 @@ class TableStore:
         (SQL DELETE semantics: only TRUE deletes)."""
         old = self.read()
         cond = F.coalesce(F.expr(condition), F.lit(False))
-        survivors = old.filter(~cond)
-        v, n = self._commit_single_dir_version(survivors)
         before = self.record_count
-        self.set_active_version(v, record_count=n)
+        _, n = self._write_version(old.filter(~cond))
         return (before - n) if before is not None else -1
 
+    @_mutation
     def update_where(self, assignments: dict[str, str], condition: str) -> int:
         """Managed UPDATE (Delta DML parity): copy-on-write rewrite
         applying ``{column: SQL expr}`` to rows matching ``condition``;
@@ -1343,8 +1358,7 @@ class TableStore:
                 for c in old.columns
             ]
         )
-        v, n = self._commit_single_dir_version(updated)
-        self.set_active_version(v, record_count=n)
+        self._write_version(updated)
         return n_updated
 
     def changes_between(
@@ -1408,6 +1422,7 @@ class TableStore:
             pre, allowMissingColumns=True
         ).unionByName(post, allowMissingColumns=True)
 
+    @_mutation
     def apply_changes(self, changes: DataFrame, keys: list[str] | None = None) -> None:
         """CDC consumer (the ``changes_between`` counterpart): apply a
         change feed — delete rows whose keys carry ``delete``, upsert the
@@ -1424,11 +1439,9 @@ class TableStore:
             F.col("_change_type").isin("insert", "update_postimage")
         ).drop("_change_type")
         old = self.read_or_empty(upserts.schema)
-        survivors = _anti_join_nullsafe(old, deletes, ks)
-        survivors = _anti_join_nullsafe(survivors, upserts, ks)
-        merged = survivors.unionByName(upserts, allowMissingColumns=True)
-        v, n = self._commit_single_dir_version(merged)
-        self.set_active_version(v, record_count=n)
+        survivors = _join_nullsafe(old, deletes, ks, "left_anti")
+        survivors = _join_nullsafe(survivors, upserts, ks, "left_anti")
+        self._write_version(survivors.unionByName(upserts, allowMissingColumns=True))
 
     def stats_drift(
         self,
@@ -1512,15 +1525,15 @@ class TableStore:
             "column string, metric string, old string, new string",
         )
 
+    @_mutation
     def truncate(self) -> None:
         """Delete all rows, keep schema (A7)."""
         if not self.has_active_version():
             return
         schema = self.version_schema(self._manifest.active_version)
-        empty = local_relation(self.spark, [], schema)
-        v, _ = self._commit_single_dir_version(empty)
-        self.set_active_version(v, record_count=0)
+        self._write_version(local_relation(self.spark, [], schema))
 
+    @_mutation
     def upsert(self, df: DataFrame) -> None:
         """Insert-or-update on ``unique_on`` (A5, node.py:318-334).
 
@@ -1537,23 +1550,15 @@ class TableStore:
             raise ValueError(
                 f"table '{self.name}' has no unique_on configured; call init(unique_on=...)"
             )
-        try:
-            df = self._decorate(df)
-            # Dedup incoming batch on the key (last wins within the batch).
-            df = df.dropDuplicates(keys)
-            if not self.has_active_version():
-                v, n = self._commit_single_dir_version(df)
-                self.set_active_version(v, record_count=n)
-                return
+        # Dedup incoming batch on the key (last wins within the batch).
+        df = self._decorate(df).dropDuplicates(keys)
+        if self.has_active_version():
             old = self.read()
             self._check_strict_schema(df, old.schema)
             df = _align_columns(df, old.schema)
             survivors = self._upsert_survivors(old, df, keys)
-            merged = survivors.unionByName(df, allowMissingColumns=True)
-            v, n = self._commit_single_dir_version(merged)
-            self.set_active_version(v, record_count=n)
-        finally:
-            self._release()
+            df = survivors.unionByName(df, allowMissingColumns=True)
+        self._write_version(df)
 
     def _upsert_survivors(
         self, old: DataFrame, df: DataFrame, keys: list[str]
@@ -1570,7 +1575,7 @@ class TableStore:
         Delta/Iceberg dynamic-partition MERGE shape."""
         pcols = self._manifest.partition_by
         if not pcols or any(c not in df.columns for c in pcols):
-            return _anti_join_nullsafe(old, df, keys)
+            return _join_nullsafe(old, df, keys, "left_anti")
         if set(pcols) <= set(keys):
             # Partition columns are part of the merge key: a key can never
             # move between partitions, so the batch's own partitions are
@@ -1591,14 +1596,16 @@ class TableStore:
             # Full-row work then stays scoped to touched partitions; the
             # narrow semi-join shuffle is the bounded price.
             proj = list(dict.fromkeys([*keys, *pcols]))
-            old_parts = _semi_join_nullsafe(old.select(*proj), df, keys).select(*pcols)
+            old_parts = _join_nullsafe(
+                old.select(*proj), df, keys, "left_semi"
+            ).select(*pcols)
             touched_df = old_parts.union(df.select(*pcols)).distinct().limit(1001)
             touched = [tuple(r[c] for c in pcols) for r in touched_df.collect()]
         if not touched:
             return old
         if len(touched) > 1000:
             # Predicate would be unwieldy; fall back to the global merge.
-            return _anti_join_nullsafe(old, df, keys)
+            return _join_nullsafe(old, df, keys, "left_anti")
         conds = []
         for t in touched:
             c = F.lit(True)
@@ -1613,7 +1620,7 @@ class TableStore:
         # coalesce: a null comparison must land a row in exactly one branch.
         in_touched = F.coalesce(cond, F.lit(False))
         untouched = old.filter(~in_touched)
-        scoped = _anti_join_nullsafe(old.filter(in_touched), df, keys)
+        scoped = _join_nullsafe(old.filter(in_touched), df, keys, "left_anti")
         return untouched.unionByName(scoped)
 
 
@@ -1660,28 +1667,19 @@ def _zorder_value(df: DataFrame, cols: list[str], bits: int = 8):
     return z
 
 
-def _semi_join_nullsafe(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
-    """Old rows whose key DOES match a row in ``new`` (NULL-safe, the
-    complement of ``_anti_join_nullsafe``)."""
+def _join_nullsafe(
+    old: DataFrame, new: DataFrame, keys: list[str], how: str
+) -> DataFrame:
+    """Old rows with (``how="left_semi"``) or without (``"left_anti"``) a
+    key match in ``new``, treating NULL key values as equal (``<=>``). A
+    plain ``on=keys`` anti-join never matches NULL=NULL, so an upsert of a
+    NULL-keyed row would duplicate it instead of replacing it."""
     o, n = old.alias("__o"), new.select(*keys).alias("__n")
     cond = None
     for k in keys:
         c = F.col(f"__o.{k}").eqNullSafe(F.col(f"__n.{k}"))
         cond = c if cond is None else cond & c
-    return o.join(n, cond, "left_semi").select(*[F.col(f"__o.{c}") for c in old.columns])
-
-
-def _anti_join_nullsafe(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
-    """Old rows with no key match in ``new``, treating NULL key values as
-    equal (``<=>``). A plain ``on=keys`` anti-join never matches NULL=NULL,
-    so an upsert of a NULL-keyed row would duplicate it instead of
-    replacing it."""
-    o, n = old.alias("__o"), new.select(*keys).alias("__n")
-    cond = None
-    for k in keys:
-        c = F.col(f"__o.{k}").eqNullSafe(F.col(f"__n.{k}"))
-        cond = c if cond is None else cond & c
-    return o.join(n, cond, "left_anti").select(*[F.col(f"__o.{c}") for c in old.columns])
+    return o.join(n, cond, how).select(*[F.col(f"__o.{c}") for c in old.columns])
 
 
 def _stat_encode(v: Any, tz: Any = None) -> Any:

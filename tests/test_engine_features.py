@@ -1547,3 +1547,45 @@ def test_respond_to_request_buffer_concurrent_eviction(spark, tmp_path):
         sys.setswitchinterval(switch)
     assert errors == []
     assert len(eng._request_responses) == 1000
+
+
+def test_failed_run_leaves_no_version_in_output_store(spark, tmp_path):
+    """A node whose output fails a store expectation makes run_graph
+    raise; rerunning with fixed data through the same cached store
+    handle commits a version, and nothing from the failed run shows up
+    in the store's history."""
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - node_file: pass.sql
+            id: passnode
+            inputs:
+              src: raw
+            outputs:
+              out: clean
+        stores:
+          - table: raw
+          - table: clean
+            expectations:
+              v_nonneg: v >= 0
+            expectations_mode: fail
+        """,
+        **{"pass.sql": "select * from {{ src }}"},
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.seed_store("raw", spark.createDataFrame([(1,)], "v int"))
+    eng.run_graph()
+    eng.seed_store("raw", spark.createDataFrame([(2,), (-1,)], "v int"))
+    with pytest.raises(Exception, match="v_nonneg"):
+        eng.run_graph()
+    eng.seed_store("raw", spark.createDataFrame([(2,), (3,)], "v int"))
+    eng.run_graph()
+
+    clean = eng.store("clean")
+    h = clean.history()
+    assert [e["version"] for e in h] == [2, 1]
+    assert all(e["on_disk"] for e in h)
+    assert [e["record_count"] for e in h] == [2, 1]
+    assert sorted(r.v for r in clean.read_version(2).collect()) == [2, 3]

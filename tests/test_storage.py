@@ -1,6 +1,7 @@
 """Storage-core semantics (SURVEY §5.2 item 3): versioning, upsert,
 monotonic ids, schema hints, vacuum, state store."""
 
+import json
 import os
 
 import pytest
@@ -1700,3 +1701,171 @@ def test_version_without_schema_record_is_inferred(spark, tmp_path):
         spark, "jobcount-legacy", lambda: fresh.read_version(v)
     )
     assert jobs == 0
+
+
+# ------------- failure rule: a mutation flips the pointer or changes nothing
+
+
+def _disk_manifest(st):
+    with open(st._manifest_path()) as f:
+        return json.load(f)
+
+
+def _bad_batch(spark, failure):
+    """A batch the write rejects: an expectation violation, or a row that
+    makes the Spark write job itself fail."""
+    v = -5.0 if failure == "expectation" else 2.0
+    df = spark.createDataFrame([(2, v)], "k int, v double")
+    if failure == "raise_error":
+        boom = F.when(F.col("k") == 2, F.raise_error(F.lit("boom")))
+        df = df.withColumn("v", boom.otherwise(F.col("v")))
+    return df
+
+
+@pytest.mark.parametrize("failure", ["expectation", "raise_error"])
+@pytest.mark.parametrize(
+    "verb, want",
+    [("write_replace", [3]), ("append", [1, 3]), ("upsert", [1, 3])],
+)
+def test_failed_write_leaves_no_version_behind(spark, tmp_path, verb, want, failure):
+    """A rejected or crashed write leaves nothing the next commit could
+    persist: history and the on-disk manifest list only committed
+    versions, the failed write's number is reused, and the next good
+    version holds exactly its own rows."""
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(
+        unique_on="k",
+        expectations={"v_nonneg": "v >= 0"},
+        expectations_mode="fail",
+    )
+    st.write_replace(spark.createDataFrame([(1, 1.0)], "k int, v double"))
+    with pytest.raises(Exception, match="v_nonneg|boom"):
+        getattr(st, verb)(_bad_batch(spark, failure))
+    assert [e["version"] for e in st.history()] == [1]
+    getattr(st, verb)(spark.createDataFrame([(3, 3.0)], "k int, v double"))
+
+    h = st.history()
+    assert [e["version"] for e in h] == [2, 1]
+    assert all(e["on_disk"] for e in h)
+    m = _disk_manifest(st)
+    assert sorted(m["versions"]) == ["1", "2"] and m["active_version"] == 2
+    assert sorted(r.k for r in st.read_version(2).collect()) == want
+    assert st.record_count == len(want)
+
+
+@pytest.mark.parametrize(
+    "first, rejected",
+    [
+        ({"cluster_by": ["x"]}, {"zorder_by": ["x", "y"]}),
+        ({"partition_by": ["p"]}, {"bucket_by": ["k"], "num_buckets": 4}),
+        ({}, {"expectations": {"x_pos": "x > 0"}, "expectations_mode": "bogus"}),
+    ],
+)
+def test_rejected_configure_changes_nothing(spark, tmp_path, first, rejected):
+    """A configure call that raises leaves the config as it was, in
+    memory and in the manifest the next commit writes."""
+    config = (
+        "partition_by", "stats_columns", "cluster_by", "zorder_by",
+        "bucket_by", "num_buckets", "expectations", "expectations_mode",
+    )
+    st = TableStore(str(tmp_path), "t", spark)
+    st.configure(**first)
+    before = {k: getattr(st._manifest, k) for k in config}
+    with pytest.raises(ValueError):
+        st.configure(**rejected)
+    assert {k: getattr(st._manifest, k) for k in config} == before
+    st.write_replace(
+        spark.createDataFrame([(1, 1, 2, "a")], "k int, x int, y int, p string")
+    )
+    m = _disk_manifest(st)
+    assert {k: m[k] for k in config} == before
+
+
+@pytest.mark.parametrize("rejection", ["expectation", "strict_schema"])
+def test_monotonic_ids_stay_dense_across_rejected_batch(spark, tmp_path, rejection):
+    """Ids advance only with a committed batch: a rejected batch's ids
+    are handed out again to the next one."""
+    from basis_devkit_spark.storage.store import SchemaMismatchError
+
+    st = TableStore(str(tmp_path), "t", spark)
+    if rejection == "expectation":
+        st.configure(
+            add_monotonic_id="id",
+            expectations={"v_nonneg": "v >= 0"},
+            expectations_mode="fail",
+        )
+        bad = _df(spark, [(2, 1.0), (3, -1.0)], "k int, v double")
+        err = ValueError
+    else:
+        st.configure(add_monotonic_id="id", strict_schema=True)
+        bad = _df(
+            spark, [(2, 1.0, "x"), (3, 1.0, "y")], "k int, v double, extra string"
+        )
+        err = SchemaMismatchError
+    st.append(_df(spark, [(0, 1.0), (1, 1.0)], "k int, v double"))
+    with pytest.raises(err):
+        st.append(bad)
+    st.append(_df(spark, [(4, 1.0)], "k int, v double"))
+    ids = sorted(int(r.id, 32) for r in st.read().collect())
+    assert ids == [1, 2, 3]
+    assert _disk_manifest(st)["max_monotonic_id"] == 3
+
+
+def test_flip_time_concurrent_write_leaves_handle_stale(spark, tmp_path, monkeypatch):
+    """Another writer commits between this handle's data write and its
+    pointer flip: the flip raises ConcurrentWriteError, and the handle
+    keeps its last committed manifest and stays fenced — every write
+    raises — until refresh()."""
+    from basis_devkit_spark.storage.store import ConcurrentWriteError
+
+    st = TableStore(str(tmp_path), "t", spark)
+    st.write_replace(spark.range(3).toDF("x"))
+    real = st._write_counted
+
+    def write_then_other_commit(*args, **kwargs):
+        out = real(*args, **kwargs)
+        m = _disk_manifest(st)
+        m["commit_seq"] += 1
+        with open(st._manifest_path(), "w") as f:
+            json.dump(m, f)
+        return out
+
+    monkeypatch.setattr(st, "_write_counted", write_then_other_commit)
+    with pytest.raises(ConcurrentWriteError):
+        st.write_replace(spark.range(5).toDF("x"))
+    monkeypatch.undo()
+    assert st.get_active_version() == 1
+    assert [e["version"] for e in st.history()] == [1]
+    with pytest.raises(ConcurrentWriteError):
+        st.write_replace(spark.range(7).toDF("x"))
+    assert st.read().count() == 3
+
+    st.refresh()
+    st.write_replace(spark.range(7).toDF("x"))
+    assert st.read().count() == 7
+    assert [e["version"] for e in st.history()] == [2, 1]
+
+
+def test_reused_version_dir_is_overwritten_whole(spark, tmp_path):
+    """The write that reuses a failed write's version number replaces the
+    whole orphan directory, even under dynamic partition overwrite: no
+    partition of the rejected batch resurfaces."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        st = TableStore(str(tmp_path), "t", spark)
+        st.configure(
+            partition_by="p",
+            expectations={"v_nonneg": "v >= 0"},
+            expectations_mode="fail",
+        )
+        schema = "k int, v double, p string"
+        st.write_replace(spark.createDataFrame([(1, 1.0, "a")], schema))
+        with pytest.raises(ValueError, match="v_nonneg"):
+            st.write_replace(spark.createDataFrame([(2, -1.0, "b")], schema))
+        st.write_replace(spark.createDataFrame([(3, 3.0, "c")], schema))
+    finally:
+        spark.conf.set(key, prev)
+    assert st.get_active_version() == 2
+    assert [r.k for r in st.read().collect()] == [3]
