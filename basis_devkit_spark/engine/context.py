@@ -97,7 +97,9 @@ class ExecutionContext:
         engine: a node that consumed records makes its progress durable
         automatically once its outputs have flushed — without this, every
         run would silently reprocess all records unless node code remembered
-        to call ``checkpoint()`` itself."""
+        to call ``checkpoint()`` itself. Each stream only sets its cursor
+        in ``state_dict``; the state file is written once, after all of
+        them."""
         for t in self.tables:
             if t.is_connected and "w" in t.mode:
                 t.flush()

@@ -407,31 +407,6 @@ class Engine:
             out.extend(n for n in self.graph.functions if n.id not in done)
         return out
 
-    def topo_levels(self) -> list[list["NodeSpec"]]:
-        """Topological LEVELS of function nodes: level k holds nodes whose
-        producers all sit in levels < k, so everything within one level is
-        mutually independent."""
-        by_id, indeg, edges = self._store_edges()
-        frontier = sorted(nid for nid, d in indeg.items() if d == 0)
-        levels: list[list[NodeSpec]] = []
-        seen: set[str] = set()
-        while frontier:
-            levels.append([by_id[nid] for nid in frontier])
-            seen.update(frontier)
-            nxt: set[str] = set()
-            for nid in frontier:
-                for m in edges[nid]:
-                    indeg[m.id] -= 1
-                    if indeg[m.id] == 0:
-                        nxt.add(m.id)
-            frontier = sorted(nxt)
-        if len(seen) != len(by_id):
-            # cycle: declaration order for the remainder, one per level
-            for n in self.graph.functions:
-                if n.id not in seen:
-                    levels.append([n])
-        return levels
-
     def _dataflow(
         self,
         roots: set[str] | None,

@@ -83,8 +83,7 @@ class Stream:
     # ---------------- progress control (A14, A15) ----------------
     def checkpoint(self) -> None:
         """Persist consumption progress now (node.py:54-58)."""
-        self._committed = self._position
-        _node_state(self.table)[self._cursor_key] = _to_jsonable(self._committed)
+        self.commit()
         _persist_state(self.table)
 
     def rollback(self) -> None:
@@ -100,9 +99,12 @@ class Stream:
         self._position = value
 
     def commit(self) -> None:
-        """Engine hook: called after the node's outputs commit — makes
-        consumed-on-yield durable (exactly-once, node.py:43-47)."""
-        self.checkpoint()
+        """Engine hook: called after the node's outputs commit — sets the
+        consumed-on-yield cursor in the node's state, which the engine then
+        persists once for all of the node's streams (exactly-once,
+        node.py:43-47)."""
+        self._committed = self._position
+        _node_state(self.table)[self._cursor_key] = _to_jsonable(self._committed)
 
 
 def _node_state(table: "Table") -> dict:

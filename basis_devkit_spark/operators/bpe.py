@@ -42,63 +42,26 @@ from .lineage import release_plan_blocks
 #: standard Sennrich formulation.
 EOW = "</w>"
 
-#: Auto-sizing threshold for the vocabulary join in the indexed apply
-#: forms: vocabularies at or below this many rows broadcast (a (word,
-#: subwords) row is ~100 B, so 2M rows ≈ 200 MB — inside a healthy
-#: executor broadcast budget); bigger ones go to AQE's shuffled hash
-#: join. Callers can still force either path with ``broadcast_vocab``.
-BROADCAST_VOCAB_MAX_ROWS = 2_000_000
+#: Byte budget for broadcasting the vocabulary in the indexed apply
+#: forms: a vocabulary whose plan size estimate fits broadcasts, a bigger
+#: one goes to AQE's shuffled hash join. About 2M (word, subwords) rows
+#: at ~100 B a row (~200 MB) — inside a healthy executor broadcast budget.
+BROADCAST_VOCAB_MAX_BYTES = 2_000_000 * 100
 
 
-def _vocab_join_broadcasts(
-    vocab: DataFrame, broadcast_vocab: bool | None
-) -> bool:
-    """Resolve the vocab-join strategy: an explicit ``broadcast_vocab``
-    wins; otherwise size the vocabulary and broadcast iff it fits
-    ``BROADCAST_VOCAB_MAX_ROWS``. Sizing resolution order (r12,
-    hardened past the attribute-only rider):
-
-    1. ``_bds_row_count`` Python attribute — exact, set by
-       ``TableStore.read`` / a completed count; dies on the first
-       transformation.
-    2. ``bds_record_count`` COLUMN METADATA — the manifest row count
-       riding the plan itself (``TableStore.read`` stamps every
-       column), so it survives an intervening select/filter/rename;
-       a filter only shrinks the frame, making it a correct UPPER
-       BOUND for the broadcast decision.
-    3. One vocabulary-sized count job (cached back on the frame
-       object) — logged, so a silent degradation to counting is
-       observable.
-
-    The final choice is logged either way."""
-    log = logging.getLogger(__name__)
-    if broadcast_vocab is not None:
-        return bool(broadcast_vocab)
-    rows = getattr(vocab, "_bds_row_count", None)
-    src = "rider"
-    if rows is None:
-        for f in vocab.schema.fields:
-            meta_rc = (f.metadata or {}).get("bds_record_count")
-            if meta_rc is not None:
-                rows = int(meta_rc)
-                src = "column-metadata upper bound"
-                break
-    if rows is None:
-        log.info(
-            "bpe vocab join: no persisted row-count rider or column "
-            "metadata on the vocabulary frame; falling back to a count job"
-        )
-        rows = vocab.count()
-        src = "count job"
-        try:
-            vocab._bds_row_count = rows  # type: ignore[attr-defined]
-        except AttributeError:
-            pass
-    choice = rows <= BROADCAST_VOCAB_MAX_ROWS
-    log.info(
-        "bpe vocab join auto-sized: %d rows (%s) -> %s",
-        rows,
-        src,
+def _vocab_join_broadcasts(vocab: DataFrame) -> bool:
+    """Broadcast the vocabulary iff Spark's optimized-plan size estimate
+    of it fits ``BROADCAST_VOCAB_MAX_BYTES`` — the same statistic Spark
+    compares with its own broadcast threshold. Reading it launches no
+    job, and it holds through a select or filter over a store read (file
+    sizes) or an emitted vocabulary (checkpoint statistics)."""
+    size = int(
+        vocab._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
+    choice = size <= BROADCAST_VOCAB_MAX_BYTES
+    logging.getLogger(__name__).info(
+        "bpe vocab join: plan estimate %d B -> %s",
+        size,
         "broadcast" if choice else "shuffled hash (AQE)",
     )
     return choice
@@ -480,7 +443,6 @@ def bpe_apply_indexed(
     out_col: str = "bpe_tokens",
     id_col: str = "doc_id",
     oov_merge_depth: int = 0,
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """Vocabulary-scale tokenization: join each document's words against
     the precomputed ``(word, subwords)`` vocabulary relation instead of
@@ -491,11 +453,9 @@ def bpe_apply_indexed(
     merges live in the vocab relation's data, not the expression tree.
 
     Shape: ``posexplode_outer`` words → hash join the vocabulary
-    (AUTO-SIZED by default: vocabularies ≤ ``BROADCAST_VOCAB_MAX_ROWS``
-    broadcast — the row count comes free from the store manifest when
-    the artifact was persisted, else one vocabulary-sized count — and
-    bigger ones go to AQE's shuffled hash join, the choice logged; pass
-    ``broadcast_vocab=True/False`` to force either) → regroup by
+    (sized from the vocabulary's plan estimate: within
+    ``BROADCAST_VOCAB_MAX_BYTES`` it broadcasts, bigger ones go to AQE's
+    shuffled hash join, the choice logged) → regroup by
     document with an ``array_sort`` on word position → flatten. Costs one corpus shuffle (the regroup) that
     :func:`bpe_apply` avoids — the trade: one data-sized shuffle vs a
     vocab-sized expression tree; at 32k merges only this form compiles.
@@ -535,7 +495,7 @@ def bpe_apply_indexed(
     voc = vocab.select(
         F.col("word").alias("__w"), F.col("subwords").alias("__sub")
     )
-    if _vocab_join_broadcasts(vocab, broadcast_vocab):
+    if _vocab_join_broadcasts(vocab):
         voc = F.broadcast(voc)
     j = ex.join(voc, "__w", "left")
     oov = F.concat(F.split(F.col("__w"), ""), F.array(F.lit(EOW)))
@@ -571,7 +531,6 @@ def bpe_token_counts_indexed(
     out_col: str = "n_bpe_tokens",
     id_col: str = "doc_id",
     oov_merge_depth: int = 0,
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """Exact per-document subword COUNTS against the tokenized
     vocabulary — the packing-path shortcut: when downstream needs only
@@ -607,7 +566,7 @@ def bpe_token_counts_indexed(
         F.col("word").alias("__w"),
         F.size("subwords").cast("long").alias("__n"),
     )
-    if _vocab_join_broadcasts(vocab, broadcast_vocab):
+    if _vocab_join_broadcasts(vocab):
         voc = F.broadcast(voc)
     oov = F.concat(F.split(F.col("__w"), ""), F.array(F.lit(EOW)))
     for left, right in ranked:
@@ -629,7 +588,6 @@ def oov_rate(
     vocab: DataFrame,
     text_col: str = "text",
     group_col: str = "source",
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """Out-of-vocabulary report per corpus slice — the tokenizer-eval
     companion to the d45 fertility report: the fraction of word
@@ -642,8 +600,8 @@ def oov_rate(
     ``vocab``: any relation with a ``word`` column — the
     ``bpe_learn_merges(emit_vocab=True)`` artifact (whose word set is
     exactly the fit corpus's distinct lowered whitespace words), or a
-    store-read vocabulary (the join strategy auto-sizes from the
-    manifest row count like the indexed apply forms).
+    store-read vocabulary (the join strategy is sized from the plan
+    estimate like the indexed apply forms).
 
     Shape: explode words → LEFT join the vocab on word (broadcast or
     shuffled hash by size) → one group-keyed aggregate (counts +
@@ -656,7 +614,7 @@ def oov_rate(
         F.col(group_col).alias("__g"), F.explode(words).alias("word")
     )
     v = vocab.select(F.col("word"), F.lit(1).alias("__hit")).distinct()
-    if _vocab_join_broadcasts(v, broadcast_vocab):
+    if _vocab_join_broadcasts(v):
         v = F.broadcast(v)
     j = ex.join(v, "word", "left")
     oov = F.col("__hit").isNull()

@@ -315,12 +315,11 @@ def _cell_rank_structs(vec: Column, cents: list[tuple[int, list[float]]]) -> Col
     LITERAL form — the plan embeds ``nlist × dim`` literal nodes, so
     Catalyst compile/codegen time grows with the quantizer (~1.5 s floor
     at nlist=16·dim=16, blowing up at production nlist=4096·dim=768).
-    Production paths use :func:`_with_cell_ranks` (``probe_form=
-    "broadcast"``, the default), which moves the centroids into a
-    broadcast RELATION and keeps compile time flat in nlist; this literal
-    form is kept as the comparison/probe baseline and for ad-hoc tiny
-    quantizers. Both forms are bit-identical (same sequential folds over
-    the same doubles — equivalence-tested)."""
+    No operator uses it: every path goes through :func:`_with_cell_ranks`,
+    which moves the centroids into a broadcast RELATION and keeps compile
+    time flat in nlist. It stays only as the reference the broadcast form
+    is tested bit-identical against (same sequential folds over the same
+    doubles)."""
     return F.array(
         *[
             F.struct(
@@ -337,14 +336,12 @@ def _with_cell_ranks(
     cents: list[tuple[int, list[float]]],
     vec: Column,
     out_col: str,
-    probe_form: str = "broadcast",
 ) -> DataFrame:
     """Attach the (−cosine, cell) rank array for every centroid to each
     row as ``out_col`` — ``array_min`` of it is the assigned cell,
     ``slice(array_sort(...), 1, nprobe)`` the probe set.
 
-    ``probe_form="broadcast"`` (default, the 100 TB shape): the centroid
-    matrix rides in a single-row broadcast relation holding
+    The centroid matrix rides in a single-row broadcast relation holding
     ``array<struct<cell,center>>`` and the ranks are a per-row
     ``transform`` over that array — a constant-key BroadcastHashJoin
     against ONE row (map-side, no shuffle, no per-query re-fit) whose
@@ -355,14 +352,7 @@ def _with_cell_ranks(
     literal form: the same sequential ``aggregate`` folds evaluate over
     the same double arrays, only their storage differs (relation data vs
     plan literals).
-
-    ``probe_form="literal"`` keeps the legacy inline-literal projection
-    (fine for tiny ad-hoc quantizers; compile cost grows with nlist).
     """
-    if probe_form == "literal":
-        return df.withColumn(out_col, _cell_rank_structs(vec, cents))
-    if probe_form != "broadcast":
-        raise ValueError(f"unknown probe_form {probe_form!r}")
     spark = df.sparkSession
     packed = spark.createDataFrame(
         [(0, [(int(j), [float(x) for x in c]) for j, c in sorted(cents)])],
@@ -397,7 +387,6 @@ def _assign_cells(
     seed: int,
     max_train_rows: int,
     centroids: DataFrame | list[tuple[int, list[float]]] | None,
-    probe_form: str = "broadcast",
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Coarse-quantizer cell assignment shared by ``ivf_topk`` and
     ``semantic_dedup``: returns ``(assigned, cents)`` where ``assigned``
@@ -409,7 +398,7 @@ def _assign_cells(
     at 100 TB; centroid quality converges long before that). With explicit
     ``centroids`` (``cell int, center array<double>``) the assignment is a
     deterministic shuffle-free per-row projection over a broadcast
-    centroid relation (``probe_form`` selects the legacy literal form)."""
+    centroid relation."""
     if centroids is None:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
@@ -437,11 +426,11 @@ def _assign_cells(
         # Centroids are driver-resident constants either way (KMeans
         # collects its centers too — bounded index metadata, nlist rows).
         # Cell assignment is a shuffle-free per-row projection (no window,
-        # no re-fit); with the default probe_form="broadcast" the centroid
-        # matrix rides in a broadcast relation so plan size stays flat in
-        # nlist (see _with_cell_ranks). Accepts either a (cell, center)
-        # DataFrame or a driver-resident [(cell, center)] list (e.g. from
-        # fit_quantizer_sample / a persisted ann_index).
+        # no re-fit); the centroid matrix rides in a broadcast relation so
+        # plan size stays flat in nlist (see _with_cell_ranks). Accepts
+        # either a (cell, center) DataFrame or a driver-resident
+        # [(cell, center)] list (e.g. from fit_quantizer_sample / a
+        # persisted ann_index).
         if isinstance(centroids, DataFrame):
             cents = [
                 (int(r["cell"]), [float(x) for x in r["center"]])
@@ -453,7 +442,7 @@ def _assign_cells(
             F.col(id_col).alias(out_id), F.col(vec_col).alias("__cv")
         )
         assigned = _with_cell_ranks(
-            corpus_v, cents, F.col("__cv"), "__cr", probe_form
+            corpus_v, cents, F.col("__cv"), "__cr"
         ).withColumn("__cell", F.array_min("__cr").getField("cell")).drop("__cr")
     return assigned, cents
 
@@ -470,7 +459,6 @@ def ivf_topk(
     max_train_rows: int = 100_000,
     centroids: DataFrame | list[tuple[int, list[float]]] | None = None,
     score_round: int | None = None,
-    probe_form: str = "broadcast",
 ) -> DataFrame:
     """IVF ANN: coarse quantizer → corpus rows assigned to their nearest
     centroid → queries probe ``nprobe`` nearest centroids → exact cosine
@@ -486,14 +474,14 @@ def ivf_topk(
     oracle-check (queries/pyoracle.py ivf_candidates)."""
     assigned, cents = _assign_cells(
         corpus, vec_col, id_col, "match_id", nlist, seed, max_train_rows,
-        centroids, probe_form,
+        centroids,
     )
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     # Probe the nprobe nearest centroids per query: sort (−cos, cell)
     # structs ascending → cosine desc with cell-asc tie-break, a total
     # deterministic order. Pure projection + explode of ≤ nprobe rows.
-    q_ranked = _with_cell_ranks(q, cents, F.col("__qv"), "__cr", probe_form)
+    q_ranked = _with_cell_ranks(q, cents, F.col("__qv"), "__cr")
     probes = F.slice(F.array_sort(F.col("__cr")), 1, nprobe)
     q_cells = q_ranked.withColumn("__probe", F.explode(probes)).select(
         "query_id", "__qv", F.col("__probe.cell").alias("__cell")
@@ -585,7 +573,6 @@ def semantic_dup_pairs(
     max_train_rows: int = 100_000,
     centroids: DataFrame | None = None,
     max_cell_size: int | None = None,
-    probe_form: str = "broadcast",
 ) -> DataFrame:
     """SemDeDup-style semantic duplicate pairs (Abbas et al. 2023,
     arXiv:2303.09540, public): coarse-quantize the embedding space into
@@ -605,8 +592,7 @@ def semantic_dup_pairs(
     pairs): cells over the cap are dropped from pairing and must be
     handled upstream (exact_dedup first is the documented workflow)."""
     assigned, _ = _assign_cells(
-        df, vec_col, id_col, "__id", nlist, seed, max_train_rows, centroids,
-        probe_form,
+        df, vec_col, id_col, "__id", nlist, seed, max_train_rows, centroids
     )
     assigned = assigned.select("__id", "__cv", "__cell")
     if max_cell_size is not None:
@@ -674,7 +660,6 @@ def semantic_dedup(
     max_train_rows: int = 100_000,
     centroids: DataFrame | None = None,
     max_cell_size: int | None = None,
-    probe_form: str = "broadcast",
     keep_by: str | None = None,
 ) -> DataFrame:
     """Keep-one semantic dedup over ``semantic_dup_pairs``: drop every row
@@ -695,7 +680,6 @@ def semantic_dedup(
         max_train_rows,
         centroids,
         max_cell_size,
-        probe_form,
     )
     if keep_by is None:
         dropped = pairs.select(F.col("id_b").alias("__drop")).distinct()
@@ -724,7 +708,6 @@ def ann_join(
     seed: int = 42,
     max_train_rows: int = 100_000,
     score_round: int | None = None,
-    probe_form: str = "broadcast",
 ) -> DataFrame:
     """Corpus-to-corpus approximate nearest-neighbor JOIN: EVERY left
     vector gets its top-``k`` cosine neighbors from ``right`` — the
@@ -768,7 +751,6 @@ def ann_join(
         max_cell_size=max_cell_size,
         seed=seed,
         max_train_rows=max_train_rows,
-        probe_form=probe_form,
     )
     return ann_join_indexed(
         left,
@@ -780,7 +762,6 @@ def ann_join(
         left_id=left_id,
         right_id=right_id,
         score_round=score_round,
-        probe_form=probe_form,
     )
 
 
@@ -793,7 +774,6 @@ def ann_index_build(
     max_cell_size: int | None = None,
     seed: int = 42,
     max_train_rows: int = 100_000,
-    probe_form: str = "broadcast",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the persistable half of an ANN retrieval index — the IVF
     build-once artifact a 100 TB RAG corpus computes at ingest, not per
@@ -818,7 +798,7 @@ def ann_index_build(
     """
     r_assigned, cents = _assign_cells(
         right, vec_col, right_id, "__rid", nlist, seed, max_train_rows,
-        centroids, probe_form,
+        centroids,
     )
     if max_cell_size is not None:
         from basis_devkit_spark.operators.dedup import _drop_hot_buckets
@@ -856,7 +836,6 @@ def ann_index_assign(
     centroids: DataFrame | list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    probe_form: str = "broadcast",
 ) -> DataFrame:
     """The INCREMENTAL half of :func:`ann_index_build`: assign new
     vectors to the cells of an EXISTING quantizer and emit rows in the
@@ -883,7 +862,7 @@ def ann_index_assign(
     vecd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     base = df.select(F.col(id_col), vecd.alias("vecd"))
     return (
-        _with_cell_ranks(base, cents, F.col("vecd"), "__cr", probe_form)
+        _with_cell_ranks(base, cents, F.col("vecd"), "__cr")
         .withColumn("cell", F.array_min("__cr").getField("cell"))
         .drop("__cr")
         .withColumn("vnorm", _norm(F.col("vecd")))
@@ -901,7 +880,6 @@ def ann_join_indexed(
     left_id: str = "vec_id",
     right_id: str = "vec_id",
     score_round: int | None = None,
-    probe_form: str = "broadcast",
 ) -> DataFrame:
     """Query a persisted ANN index (see :func:`ann_index_build`): each
     left vector probes its ``nprobe`` nearest centroids (a per-row
@@ -924,7 +902,7 @@ def ann_join_indexed(
         F.col("vnorm").alias("__rn"),
     )
     lv = left.select(F.col(left_id).alias("__lid"), F.col(vec_col).alias("__lv"))
-    lv_ranked = _with_cell_ranks(lv, cents, F.col("__lv"), "__cr", probe_form)
+    lv_ranked = _with_cell_ranks(lv, cents, F.col("__lv"), "__cr")
     probe_cells = F.slice(F.array_sort(F.col("__cr")), 1, nprobe)
     lvd = F.transform(F.col("__lv"), lambda x: x.cast("double"))
     l_probe = (

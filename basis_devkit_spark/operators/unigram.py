@@ -371,7 +371,6 @@ def unigram_lm_apply_indexed(
     id_col: str = "doc_id",
     max_piece_len: int = 4,
     max_word_len: int = 64,
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """Tokenize a batch with a fitted piece table: Viterbi-segment the
     batch's DISTINCT words (so unseen words are segmented exactly, not
@@ -398,5 +397,4 @@ def unigram_lm_apply_indexed(
         text_col=text_col,
         out_col=out_col,
         id_col=id_col,
-        broadcast_vocab=broadcast_vocab,
     )

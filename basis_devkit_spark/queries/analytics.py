@@ -4246,7 +4246,8 @@ def d31(spark: SparkSession, sf: str) -> DataFrame:
     "oracled vs the independent Python model (pyoracle.bpe_tokens_model "
     "— the full SEQUENCE, proving the join-and-regroup preserves greedy-"
     "fold order). 100 TB: vocab relation is millions of rows "
-    "(broadcastable; broadcast_vocab=False for a shuffled hash join), "
+    "(broadcast while its plan size estimate fits the vocab byte "
+    "budget, a shuffled hash join beyond it), "
     "cost is one corpus regroup shuffle vs a 32k-deep expression tree "
     "that never compiles",
 )

@@ -287,6 +287,7 @@ class TableStore:
         commits); after this the handle may commit again."""
         self._manifest = self._load_manifest()
         self._loaded_seq = self._manifest.commit_seq
+        self._allocated: set[int] = set()
 
     @contextlib.contextmanager
     def _guard(self):
@@ -302,6 +303,7 @@ class TableStore:
             yield
         except BaseException:
             self._manifest = self._committed_manifest()
+            self._allocated.clear()
             raise
         finally:
             self._release()
@@ -329,6 +331,12 @@ class TableStore:
         # Check-and-swap: the commit is only valid if nobody else
         # committed since this handle's manifest load.
         self._check_fence()
+        # A version allocated since the last commit and not made active by
+        # this one was never committed (its writer failed or gave up
+        # before ``set_active_version``): it must not become history.
+        for v in self._allocated - {self._manifest.active_version}:
+            self._manifest.versions.pop(str(v), None)
+        self._allocated.clear()
         self._manifest.commit_seq = self._loaded_seq + 1
         text = json.dumps(self._manifest.to_json(), indent=1)
         tmp = self._manifest_path() + ".tmp"
@@ -345,6 +353,10 @@ class TableStore:
         return os.path.join(self.path, f"v={version}")
 
     def create_new_version(self) -> int:
+        """Allocate the next version number and its entry. The entry is
+        committed only by the ``set_active_version`` that makes it active:
+        any other commit first drops it, so an allocation whose files
+        were never written or never flipped to leaves no version behind."""
         # Early fence: a stale handle would allocate the SAME version
         # number another writer already used — its data write would land
         # in (and clobber) their directory before the commit-time check
@@ -353,6 +365,7 @@ class TableStore:
         v = self._manifest.next_version
         self._manifest.next_version += 1
         self._manifest.versions[str(v)] = {"version": v, "created_at": time.time()}
+        self._allocated.add(v)
         return v
 
     def get_active_version(self) -> int | None:
@@ -382,8 +395,11 @@ class TableStore:
         ``create_new_version`` registered, so neither this handle's reads
         nor a later commit ever see a version that was never committed."""
         self._manifest.active_version = version
+        entry = self._manifest.versions.setdefault(
+            str(version), {"version": version, "created_at": time.time()}
+        )
         if record_count is not None:
-            self._manifest.versions.setdefault(str(version), {})["record_count"] = record_count
+            entry["record_count"] = record_count
         self._commit_manifest()
 
     @_mutation
@@ -830,31 +846,12 @@ class TableStore:
 
     # ---------------- read (A1) ----------------
     def read(self) -> DataFrame:
+        """The active version's rows, exactly as stored — no row count or
+        other metadata rides on the frame (a consumer that needs a size
+        asks Spark's plan statistics, which cost no job)."""
         if not self.has_active_version():
             raise FileNotFoundError(f"table '{self.name}' has no active version")
-        df = self._read_lineage(self._manifest.active_version)
-        # expose the manifest's persisted row count on the frame: size-
-        # aware consumers (e.g. the BPE vocab join auto-sizer) can pick
-        # a join strategy without an extra count job over the artifact.
-        # Carried TWICE: a Python attribute (exact, but dies on the first
-        # transformation) and column METADATA in the plan itself, which
-        # survives select/filter/rename as long as any original column
-        # does — downstream a filter can only shrink the frame, so the
-        # metadata value is a correct UPPER BOUND for join sizing.
-        # One projection stamps every column (a withMetadata per column
-        # would build and analyse a new Dataset each time).
-        rc = self.record_count
-        if rc is not None:
-            df = df.select(
-                *[
-                    F.col(f.name).alias(
-                        f.name, metadata={**f.metadata, "bds_record_count": int(rc)}
-                    )
-                    for f in df.schema.fields
-                ]
-            )
-            df._bds_row_count = rc  # type: ignore[attr-defined]
-        return df
+        return self._read_lineage(self._manifest.active_version)
 
     def read_version(self, version: int) -> DataFrame:
         """Time-travel read of any retained version (TableVersion access,

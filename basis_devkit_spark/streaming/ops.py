@@ -219,6 +219,25 @@ def stateful_running_agg(
     )
 
 
+def _foreach_batch_sink(
+    df: DataFrame,
+    write,
+    checkpoint_dir: str,
+    trigger_seconds: int | None,
+    output_mode: str = "update",
+):
+    """The one sink shape behind every ``stream_*_to_store``: each
+    micro-batch goes to ``write(batch_df, batch_id)``, progress lives in
+    ``checkpoint_dir``, and ``trigger_seconds`` (when set) fixes a
+    processing-time trigger. Returns the unstarted writer."""
+    w = df.writeStream.foreachBatch(write).option(
+        "checkpointLocation", checkpoint_dir
+    ).outputMode(output_mode)
+    if trigger_seconds is not None:
+        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
+    return w
+
+
 def stream_append_to_store(
     df: DataFrame,
     store,
@@ -236,12 +255,9 @@ def stream_append_to_store(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         store.append_stream_batch(batch_df, batch_id)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("append")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(
+        df, _write, checkpoint_dir, trigger_seconds, "append"
+    )
 
 
 def stream_to_managed_table(
@@ -312,12 +328,7 @@ def stream_upsert_to_store(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         store.upsert_stream_batch(batch_df, batch_id)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, _write, checkpoint_dir, trigger_seconds)
 
 
 def stream_merge_to_store(
@@ -340,12 +351,7 @@ def stream_merge_to_store(
         existing = store.read() if store.has_active_version() else None
         store.upsert_stream_batch(merge_fn(batch_df, existing), batch_id)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, _write, checkpoint_dir, trigger_seconds)
 
 
 def stream_pack_append_to_store(
@@ -386,12 +392,7 @@ def stream_pack_append_to_store(
             prepare_fn=prepare_fn,
         )
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, _write, checkpoint_dir, trigger_seconds)
 
 
 def pack_append_batch(
@@ -559,12 +560,7 @@ def stream_transition_counts_to_store(
             event_col=event_col,
         )
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, _write, checkpoint_dir, trigger_seconds)
 
 
 def novelty_gate_batch(
@@ -631,12 +627,7 @@ def stream_novelty_gate_to_store(
             id_col=id_col, text_col=text_col,
         )
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, _write, checkpoint_dir, trigger_seconds)
 
 
 def cusum_batch(
@@ -789,9 +780,4 @@ def stream_cusum_to_store(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         cusum_batch(rows_store, state_store, batch_df, batch_id, **kw)
 
-    w = df.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint_dir
-    ).outputMode("update")
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
+    return _foreach_batch_sink(df, _write, checkpoint_dir, trigger_seconds)

@@ -543,10 +543,9 @@ def test_store_layout_from_graph_yaml(spark, tmp_path):
 
 
 def test_run_graph_parallel_levels_match_sequential(spark, tmp_path):
-    """parallelism>1 submits each topo level's independent nodes
-    concurrently; results must equal the sequential run, downstream nodes
-    still see committed upstream outputs, and topo_levels groups the
-    diamond correctly."""
+    """parallelism>1 runs the diamond's two independent branches
+    concurrently; results must equal the sequential run, and the joiner
+    still sees both branches' committed outputs."""
     yml = """
     functions:
       - node_file: a.sql
@@ -583,8 +582,6 @@ def test_run_graph_parallel_levels_match_sequential(spark, tmp_path):
         return eng
 
     eng_p = build(tmp_path / "par")
-    levels = [[n.id for n in lvl] for lvl in eng_p.topo_levels()]
-    assert levels == [["brancha", "branchb"], ["joiner"]]
     eng_p.run_graph(parallelism=4)
     got_p = {(r.n, r.v, r.w) for r in eng_p.table_df("joined").collect()}
 
@@ -1010,6 +1007,107 @@ def test_event_analytics_example_app(spark, tmp_path):
         (F.col("stickiness") <= 0) | (F.col("stickiness") > 1)
         | (F.col("dau") > F.col("wau"))
     ).count() == 0
+
+
+def test_event_analytics_stores_carry_no_foreign_row_count(spark, tmp_path):
+    """A store read returns only stored data: nothing it adds to the
+    frame may travel into the stores a node derives from it. After two
+    passes of examples/event_analytics (the second pass reads stores the
+    first one wrote), no manifest schema record and no parquet footer of
+    any store holds a ``bds_record_count`` field annotation."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "store"
+    eng = Engine(spark, str(root))
+    eng.load_graph("examples/event_analytics")
+    eng.seed_store(
+        "events", spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    )
+    eng.run_graph()
+    eng.run_graph()
+
+    manifests = glob.glob(os.path.join(root, "*", "_manifest.json"))
+    assert len(manifests) >= 6
+    for m in manifests:
+        with open(m) as f:
+            assert "bds_record_count" not in f.read(), m
+    footers = glob.glob(os.path.join(root, "*", "**", "*.parquet"), recursive=True)
+    assert footers
+    for f in footers:
+        kv = pq.ParquetFile(f).metadata.metadata or {}
+        assert not any(b"bds_record_count" in v for v in kv.values()), f
+
+
+def test_stream_cursors_persist_once_per_node_commit(spark, tmp_path):
+    """The engine's commit sets every stream cursor in the node's state
+    and writes the state file ONCE, however many streams the node
+    consumed; an explicit ``checkpoint()`` in node code still persists
+    at once. Both nodes' cursors are durable: a second run sees no new
+    records."""
+    from collections import Counter
+
+    app = write_app(
+        tmp_path / "app",
+        """
+        functions:
+          - node_file: both.py
+            id: both
+            inputs: { a: evens, b: odds }
+            outputs: { out: both_n }
+          - node_file: eager.py
+            id: eager
+            inputs: { a: evens }
+            outputs: { out: eager_n }
+        stores:
+          - table: evens
+            strictly_monotonic_ordering: k
+          - table: odds
+            strictly_monotonic_ordering: k
+          - table: both_n
+          - table: eager_n
+        """,
+        **{
+            "both.py": """
+            from basis_devkit_spark import *
+
+            @node
+            def both(a=InputStream, b=InputStream, out=OutputTable):
+                n = a.consume_dataframe().count() + b.consume_dataframe().count()
+                out.append([{"n": n}])
+            """,
+            "eager.py": """
+            from basis_devkit_spark import *
+
+            @node
+            def eager(a=InputStream, out=OutputTable):
+                n = a.consume_dataframe().count()
+                a.checkpoint()
+                out.append([{"n": n}])
+            """,
+        },
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.load_graph(app)
+    eng.seed_store("evens", spark.createDataFrame([(0,), (2,)], "k long"))
+    eng.seed_store("odds", spark.createDataFrame([(1,), (3,), (5,)], "k long"))
+    saves = Counter()
+    save = eng.state_store.save
+
+    def counting_save(node_id, state):
+        saves[node_id] += 1
+        save(node_id, state)
+
+    eng.state_store.save = counting_save
+    eng.run_graph()
+    assert saves == {"both": 1, "eager": 2}
+    assert sorted(r.n for r in eng.table_df("both_n").collect()) == [5]
+    assert sorted(r.n for r in eng.table_df("eager_n").collect()) == [2]
+    eng.run_graph()
+    assert sorted(r.n for r in eng.table_df("both_n").collect()) == [0, 5]
+    assert sorted(r.n for r in eng.table_df("eager_n").collect()) == [0, 2]
 
 
 def test_incremental_stream_example_app(spark, tmp_path):

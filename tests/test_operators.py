@@ -3484,12 +3484,12 @@ def test_ann_index_assign_matches_build(spark, emb):
 
 
 def test_probe_form_broadcast_bit_identical_to_literal(spark, emb):
-    """The broadcast-relation probe form (the 100 TB default: centroids in
-    a single-row broadcast relation, ranks via a per-row transform) is
-    BIT-identical to the legacy literal form — same sequential cosine
-    folds over the same doubles, only the centroid storage differs. Both
-    the assigned cell AND the raw (-cosine) rank score must match to the
-    last ulp, row for row."""
+    """The broadcast-relation probe form (centroids in a single-row
+    broadcast relation, ranks via a per-row transform) is BIT-identical
+    to the literal reference ``_cell_rank_structs`` — same sequential
+    cosine folds over the same doubles, only the centroid storage
+    differs. Both the assigned cell AND the raw (-cosine) rank score must
+    match to the last ulp, row for row."""
     import random
 
     from pyspark.sql import functions as F
@@ -3505,7 +3505,7 @@ def test_probe_form_broadcast_bit_identical_to_literal(spark, emb):
         (j, [rng.gauss(0, 1) for _ in range(dim)]) for j in range(8)
     ]
     lit = emb.withColumn("__cr", _cell_rank_structs(F.col("embedding"), cents))
-    bc = _with_cell_ranks(emb, cents, F.col("embedding"), "__cr", "broadcast")
+    bc = _with_cell_ranks(emb, cents, F.col("embedding"), "__cr")
     pick = lambda df: (
         df.select(
             "vec_id",
@@ -3526,12 +3526,11 @@ def test_probe_form_broadcast_bit_identical_to_literal(spark, emb):
 
 
 def test_probe_form_broadcast_plan_flat_in_nlist(spark, emb):
-    """The scale gate for r6's one flagged flaw: at nlist=64 the broadcast
-    probe plan must (a) attach centroids through a broadcast HASH join —
-    never a nested loop/cartesian — and (b) carry NO giant literal
-    array: its plan string stays a fraction of the literal form's (which
-    embeds nlist x dim double literals) and, unlike the literal form,
-    does not grow with nlist."""
+    """The scale gate for probe-cell assignment: the centroids attach
+    through a broadcast HASH join — never a nested loop/cartesian — and
+    ride as relation data, not plan literals, so the executed plan of an
+    indexed ANN query does not grow with nlist (8 -> 64 -> 256 centroids:
+    same operators, same column ids modulo counters)."""
     import random
 
     from pyspark.sql import functions as F
@@ -3543,26 +3542,23 @@ def test_probe_form_broadcast_plan_flat_in_nlist(spark, emb):
     left = emb.filter(F.col("vec_id") % 2 == 0)
     right = emb.filter(F.col("vec_id") % 2 == 1)
 
-    def plan_for(nlist, form):
+    def plan_for(nlist):
         cents = [
             (j, [rng.gauss(0, 1) for _ in range(dim)]) for j in range(nlist)
         ]
-        _, cells = ann_index_build(right, nlist=nlist, centroids=cents,
-                                   probe_form=form)
-        q = ann_join_indexed(left, cents, cells, k=3, nprobe=4,
-                             probe_form=form)
+        _, cells = ann_index_build(right, nlist=nlist, centroids=cents)
+        q = ann_join_indexed(left, cents, cells, k=3, nprobe=4)
         return q._jdf.queryExecution().executedPlan().toString()
 
-    bc64 = plan_for(64, "broadcast")
-    assert "BroadcastHashJoin" in bc64
-    assert "BroadcastNestedLoopJoin" not in bc64
-    assert "CartesianProduct" not in bc64
-    lit64 = plan_for(64, "literal")
-    assert len(bc64) < len(lit64) / 5, (len(bc64), len(lit64))
-    bc8 = plan_for(8, "broadcast")
-    # flat in nlist: within noise of the nlist=8 plan (same operators,
-    # same column ids modulo counters)
-    assert len(bc64) < 1.2 * len(bc8), (len(bc8), len(bc64))
+    plans = {n: plan_for(n) for n in (8, 64, 256)}
+    for plan in plans.values():
+        assert "BroadcastHashJoin" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+    # 256 centroids x dim doubles inline would add tens of KB of plan
+    # text; the broadcast plan stays within noise of the nlist=8 one
+    for n in (64, 256):
+        assert len(plans[n]) < 1.2 * len(plans[8]), (n, len(plans[8]), len(plans[n]))
 
 
 def test_sequence_pack_supplied_counts_equivalence(spark):
@@ -4701,18 +4697,20 @@ def test_bpe_apply_plan_is_pure_projection(spark, docs):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-@pytest.mark.parametrize("broadcast_vocab", [True, False])
-def test_bpe_apply_indexed_equals_fold(spark, docs, broadcast_vocab):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_bpe_apply_indexed_equals_fold(spark, docs, broadcast, monkeypatch):
     """d37 semantics: the vocabulary-indexed apply (explode -> vocab
     join -> position-sorted regroup) reproduces bpe_apply's greedy
     fold tokenization BYTE-FOR-BYTE, including empty/null-text docs, and
     the emitted vocab costs no refit. Both vocab-join strategies are
-    equivalence-gated: broadcast (the default) and the
-    ``broadcast_vocab=False`` escape hatch for vocabularies bigger than
-    executor broadcast budget, whose plan must carry NO broadcast of
-    the vocab side (AQE picks a shuffled/sort-merge join)."""
+    equivalence-gated: broadcast (a vocabulary within
+    ``BROADCAST_VOCAB_MAX_BYTES``) and the shuffled join a vocabulary
+    beyond the budget gets (reached here by patching the budget below
+    any estimate), whose plan must carry NO broadcast hint on the vocab
+    side (AQE picks a shuffled/sort-merge join)."""
     from pyspark.sql import functions as F
 
+    from basis_devkit_spark.operators import bpe as bpe_mod
     from basis_devkit_spark.operators.bpe import (
         bpe_apply,
         bpe_apply_indexed,
@@ -4728,23 +4726,18 @@ def test_bpe_apply_indexed_equals_fold(spark, docs, broadcast_vocab):
     a = bpe_apply(d, mt).select(
         "doc_id", F.concat_ws("\x01", "bpe_tokens").alias("s")
     )
-    b = bpe_apply_indexed(
-        d, vocab, mt, broadcast_vocab=broadcast_vocab
-    ).select("doc_id", F.concat_ws("\x01", "bpe_tokens").alias("s2"))
+    if not broadcast:
+        monkeypatch.setattr(bpe_mod, "BROADCAST_VOCAB_MAX_BYTES", -1)
+    b = bpe_apply_indexed(d, vocab, mt)
+    # the shuffled path must not silently re-broadcast: gate the optimized
+    # logical plan's join hint, not the physical operator (AQE may still
+    # pick a broadcast join from SIZE stats on this tiny test vocab)
+    opt = b._jdf.queryExecution().optimizedPlan().toString()
+    assert ("strategy=broadcast" in opt) == broadcast
+    b = b.select("doc_id", F.concat_ws("\x01", "bpe_tokens").alias("s2"))
     j = a.join(b, "doc_id")
     assert j.count() == d.count()
     assert j.filter(F.col("s") != F.col("s2")).count() == 0
-    if not broadcast_vocab:
-        # the escape hatch must not silently re-broadcast: no broadcast
-        # hint survives on the vocab side of the word join (AQE may
-        # still pick a broadcast join from SIZE stats on this tiny test
-        # vocab, so gate the optimized logical plan's join hint, not
-        # the physical operator)
-        opt = (
-            bpe_apply_indexed(d, vocab, mt, broadcast_vocab=False)
-            ._jdf.queryExecution().optimizedPlan().toString()
-        )
-        assert "strategy=broadcast" not in opt
 
 
 def test_bpe_apply_indexed_oov_and_plan_depth(spark, docs):
@@ -4779,16 +4772,18 @@ def test_bpe_apply_indexed_oov_and_plan_depth(spark, docs):
     assert 0 < deep <= 4  # capped by the parameter, not the 8-row table
 
 
-@pytest.mark.parametrize("broadcast_vocab", [True, False])
-def test_bpe_counts_indexed_equals_apply_sizes(spark, docs, broadcast_vocab):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_bpe_counts_indexed_equals_apply_sizes(spark, docs, broadcast, monkeypatch):
     """d40: the counts-only indexed path (broadcast (word, n_sub) longs,
     one map-side-combinable SUM — no token-array regroup) agrees exactly
     with size(bpe_apply_indexed(...).bpe_tokens), including OOV words
     under the capped fold and empty/null-text docs (count 0) — under
-    both vocab-join strategies (``broadcast_vocab=False`` is the
-    huge-vocab escape hatch)."""
+    both vocab-join strategies (the shuffled one, for a vocabulary
+    beyond ``BROADCAST_VOCAB_MAX_BYTES``, reached by patching the
+    budget below any estimate)."""
     from pyspark.sql import functions as F
 
+    from basis_devkit_spark.operators import bpe as bpe_mod
     from basis_devkit_spark.operators.bpe import (
         bpe_apply_indexed,
         bpe_learn_merges,
@@ -4804,9 +4799,11 @@ def test_bpe_counts_indexed_equals_apply_sizes(spark, docs, broadcast_vocab):
     full = bpe_apply_indexed(d, vocab, mt, oov_merge_depth=2).select(
         "doc_id", F.size("bpe_tokens").cast("long").alias("__n_full")
     )
-    fast = bpe_token_counts_indexed(
-        d, vocab, mt, oov_merge_depth=2, broadcast_vocab=broadcast_vocab
-    )
+    if not broadcast:
+        monkeypatch.setattr(bpe_mod, "BROADCAST_VOCAB_MAX_BYTES", -1)
+    fast = bpe_token_counts_indexed(d, vocab, mt, oov_merge_depth=2)
+    opt = fast._jdf.queryExecution().optimizedPlan().toString()
+    assert ("strategy=broadcast" in opt) == broadcast
     j = fast.join(full, "doc_id")
     assert j.count() == d.count()
     assert j.filter(F.col("n_bpe_tokens") != F.col("__n_full")).count() == 0
@@ -4938,27 +4935,32 @@ def test_oov_rate_handcomputed(spark):
     assert g2["n_types"] == 1 and g2["oov_token_rate"] == 1.0
 
 
-def test_bpe_vocab_join_auto_sizing(spark, docs, tmp_path, caplog):
-    """r10 verdict task 7 (+ r12 hardening): with broadcast_vocab unset,
-    the vocab join strategy comes from the vocabulary's ROW COUNT — at
-    or below BROADCAST_VOCAB_MAX_ROWS the plan keeps the broadcast
-    hint, above it the hint is dropped (AQE's shuffled hash join), with
-    no caller change. A store-read vocab carries the manifest's
-    persisted record_count BOTH as an attribute rider and as column
-    metadata in the plan, so the decision costs no count job even
-    through an intervening select/filter; a frame with neither emits an
-    observable fallback log line before counting."""
-    import logging
-
+def test_bpe_vocab_join_auto_sizing(spark, docs, tmp_path, monkeypatch):
+    """The vocab-join strategy comes from the vocabulary's optimized-plan
+    size estimate, with no caller option: within
+    BROADCAST_VOCAB_MAX_BYTES the plan keeps the broadcast hint, one byte
+    short of the estimate it drops it (AQE's shuffled hash join). Sizing
+    launches no Spark job — for an emitted vocab, and for a store-read
+    vocab, also after a filter and select — and a store read carries no
+    row-count metadata on its columns."""
     from pyspark.sql import functions as F
 
+    from basis_devkit_spark.operators import bpe as bpe_mod
     from basis_devkit_spark.operators.bpe import (
+        _vocab_join_broadcasts,
         bpe_learn_merges,
         bpe_token_counts_indexed,
     )
     from basis_devkit_spark.storage.store import TableStore
 
     mt, vocab = bpe_learn_merges(docs, "text", num_merges=4, emit_vocab=True)
+    store = TableStore(str(tmp_path / "root"), "vocab", spark)
+    store.write_replace(vocab)
+    off_store = store.read()
+    assert not any(f.metadata for f in off_store.schema.fields)
+    derived = off_store.filter(F.col("word") != "").select(
+        "word", "subwords"
+    )
 
     def has_hint(voc):
         opt = (
@@ -4967,51 +4969,25 @@ def test_bpe_vocab_join_auto_sizing(spark, docs, tmp_path, caplog):
         )
         return "strategy=broadcast" in opt
 
-    # small vocab, no rider: fallback path logs, counts once, caches
-    with caplog.at_level(
-        logging.INFO, logger="basis_devkit_spark.operators.bpe"
-    ):
-        assert has_hint(vocab)
-    assert any(
-        "falling back to a count job" in r.message for r in caplog.records
+    sc = spark.sparkContext
+    for i, voc in enumerate((vocab, off_store, derived)):
+        group = f"bpe-vocab-sizing-{i}"
+        sc.setJobGroup(group, "probe")
+        try:
+            assert _vocab_join_broadcasts(voc)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert has_hint(voc)
+
+    size = int(
+        derived._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
-    assert getattr(vocab, "_bds_row_count", None) == vocab.count()
-    # same vocab claimed huge -> shuffled path, no caller change
-    vocab._bds_row_count = 10_000_001
-    assert not has_hint(vocab)
-    # store round-trip: read() exposes the persisted record_count
-    store = TableStore(str(tmp_path / "root"), "vocab", spark)
-    store.write_replace(vocab)
-    off_store = store.read()
-    assert getattr(off_store, "_bds_row_count", None) == vocab.count()
-    assert has_hint(off_store)
-    # r12: an intervening filter/select drops the attribute rider, but
-    # the manifest count rides COLUMN METADATA in the plan — sizing
-    # still needs no count job and the value acts as an upper bound
-    derived = off_store.filter(F.col("word") != "").select(
-        "word", "subwords"
-    )
-    assert getattr(derived, "_bds_row_count", None) is None
-    assert (
-        derived.schema["word"].metadata.get("bds_record_count")
-        == vocab.count()
-    )
-    caplog.clear()
-    with caplog.at_level(
-        logging.INFO, logger="basis_devkit_spark.operators.bpe"
-    ):
-        assert has_hint(derived)
-    assert not any(
-        "falling back to a count job" in r.message for r in caplog.records
-    )
-    assert any(
-        "column-metadata upper bound" in r.message for r in caplog.records
-    )
-    # a huge metadata bound flips the derived frame to the shuffled path
-    big = derived.withMetadata(
-        "word", {"bds_record_count": 10_000_001}
-    ).withMetadata("subwords", {"bds_record_count": 10_000_001})
-    assert not has_hint(big)
+    assert 0 < size < bpe_mod.BROADCAST_VOCAB_MAX_BYTES
+    monkeypatch.setattr(bpe_mod, "BROADCAST_VOCAB_MAX_BYTES", size)
+    assert has_hint(derived)
+    monkeypatch.setattr(bpe_mod, "BROADCAST_VOCAB_MAX_BYTES", size - 1)
+    assert not has_hint(derived)
 
 
 def test_release_tokenizer_vocab_drops_pinned_blocks(spark, docs):

@@ -1203,6 +1203,35 @@ def test_commit_failure_discards_uncommitted_version_entry(spark, tmp_path):
     assert st2.read().count() == 2
 
 
+def test_abandoned_allocation_never_reaches_a_later_commit(spark, tmp_path):
+    """A version allocated through the public ``create_new_version`` and
+    never flipped to (its caller wrote no files, or failed) is not
+    history: the next commit of another version drops it, in this handle
+    and on disk. The allocate -> write files -> ``set_active_version``
+    path still commits its version, also when another commit came in
+    between."""
+    from basis_devkit_spark.storage.store import TableStore
+
+    st = TableStore(str(tmp_path), "t", spark)
+    st.write_replace(_df(spark, [(1, "a")]))
+    ghost = st.create_new_version()
+    st.write_replace(_df(spark, [(2, "b")]))
+    got = [(h["version"], h["on_disk"]) for h in st.history()]
+    assert (ghost, False) not in got
+    assert got == [(ghost + 1, True), (1, True)]
+    fresh = TableStore(str(tmp_path), "t", spark)
+    assert str(ghost) not in fresh._manifest.versions
+    assert [h["version"] for h in fresh.history()] == [ghost + 1, 1]
+
+    v = st.create_new_version()
+    st.configure(stats_columns="k")  # an unrelated commit in between
+    _df(spark, [(3, "c")]).write.parquet(st.version_path(v))
+    st.set_active_version(v)
+    assert [(r.k, r.v) for r in st.read().collect()] == [(3, "c")]
+    assert st.history()[0]["version"] == v
+    assert st.history()[0]["created_at"] is not None
+
+
 def test_changes_between_preserves_dunder_named_columns(spark, tmp_path):
     """ADVICE r4: a user column that happens to start with '__' must not
     be silently dropped from the change feed (the internal __op/__np
@@ -1497,8 +1526,7 @@ def _jobs_launched(spark, group, fn):
 
 
 def _fields(schema):
-    """(name, type, nullable) per field; ``read()`` also decorates each
-    field's metadata with the row count."""
+    """(name, type, nullable) per field."""
     return [(f.name, f.dataType, f.nullable) for f in schema.fields]
 
 
