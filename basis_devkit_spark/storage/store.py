@@ -1046,10 +1046,28 @@ class TableStore:
     def _write(self, df: DataFrame, path: str, mode: str, **options) -> None:
         """Write ``df`` in the store's layout; ``options`` are writer
         options scoped to this one write (never session conf, which
-        concurrent writers share)."""
+        concurrent writers share).
+
+        A clustered write (``zorder_by`` or ``cluster_by``) holds each
+        file to at most advisory-size-worth of rows: the writing
+        session's ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+        over Spark's per-row size estimate, as a ``maxRecordsPerFile``
+        option (the smaller one wins when the caller passes its own).
+        The range exchange starts from ``spark.sql.shuffle.partitions``
+        (the core count by default) and AQE only merges partitions, so
+        without the cap the file count would track the host's cores, not
+        the data.
+        Each range partition is sorted on the key, so its split files
+        cover contiguous, tight ranges."""
         cb = self._manifest.cluster_by
         zb = self._manifest.zorder_by
-        if zb and all(c in df.columns for c in zb):
+        zorder = bool(zb) and all(c in df.columns for c in zb)
+        cluster = not zorder and bool(cb) and all(c in df.columns for c in cb)
+        if zorder or cluster:
+            cap = _rows_per_advisory_partition(df)
+            cap = min(cap, options.get("maxRecordsPerFile", cap))
+            options["maxRecordsPerFile"] = cap
+        if zorder:
             # Z-order: bit-interleave per-column quantile ranks into one
             # curve value, then range-cluster on it. Every listed dimension
             # gets partial locality in every file → footer stats prune on
@@ -1063,7 +1081,7 @@ class TableStore:
                 .sortWithinPartitions(zcol)
                 .drop(zcol)
             )
-        elif cb and all(c in df.columns for c in cb):
+        elif cluster:
             # Range-cluster so each file covers a tight, near-disjoint
             # range of the cluster key → footer stats prune hard. One
             # extra range shuffle per write; reads win it back every time.
@@ -1619,6 +1637,20 @@ class TableStore:
         untouched = old.filter(~in_touched)
         scoped = _join_nullsafe(old.filter(in_touched), df, keys, "left_anti")
         return untouched.unionByName(scoped)
+
+
+def _rows_per_advisory_partition(df: DataFrame) -> int:
+    """Rows of ``df`` that fill one advisory-size partition: the session's
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (parsed by Spark's
+    own byte-string parser) over Spark's per-row size estimate, ``8 +
+    schema.defaultSize`` (``EstimationUtils.getSizePerRow``). Read from
+    ``df``'s own session: a streaming micro-batch runs in the stream's
+    cloned session, not the store's."""
+    spark = df.sparkSession
+    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(1, int(target) // (8 + df._jdf.schema().defaultSize()))
 
 
 def _zorder_value(df: DataFrame, cols: list[str], bits: int = 8):

@@ -787,6 +787,50 @@ def test_zorder_prunes_on_every_dimension(spark, tmp_path):
     assert zo.read_pruned(y_filter).count() == want
 
 
+def test_clustered_write_file_count_follows_bytes_not_cores(spark, tmp_path):
+    """A clustered write holds each file to advisory-size-worth of rows,
+    so the same write makes the same multi-file layout whatever the
+    shuffle partition count (the core count by default) is. compact()'s
+    own smaller record cap still wins over the advisory-derived one."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    df = _mk_xy(spark)
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    counts = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8192")
+        for parts in (2, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            st = TableStore(str(tmp_path / f"p{parts}"), "t", spark)
+            st.configure(cluster_by=["x"], stats_columns=["x"])
+            st.write_replace(df)
+            counts[parts] = st.prune_files([])[1]
+            assert st.read().count() == df.count()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert counts[2] > 16 and counts[16] > 16, counts
+
+    zo = TableStore(str(tmp_path / "zo"), "t", spark)
+    zo.configure(zorder_by=["x", "y"])
+    zo.write_replace(df)
+    cap = 500
+    zo.compact(max_records_per_file=cap)
+    vdir = zo.version_path(zo.get_active_version())
+    rows = [
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(vdir, "*.parquet"))
+    ]
+    assert sum(rows) == df.count()
+    assert max(rows) <= cap, rows
+
+
 def test_zorder_and_cluster_by_are_exclusive(spark, tmp_path):
     store = TableStore(str(tmp_path), "zc", spark)
     store.configure(cluster_by=["x"])
